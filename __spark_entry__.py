@@ -24,6 +24,7 @@ pandas-UDF pipelines.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -46,20 +47,24 @@ from marie_ai_spark.sources.transcripts import gen_spark
 
 # schema memo for _t: spark.read.parquet infers the schema from the file
 # footer on EVERY call (~80ms of driver file-listing + footer I/O per
-# read, measured); the schema of a given table file never changes within
-# a process, so infer once and pass it explicitly afterwards. This caches
-# plan METADATA only — every query still scans the parquet data itself.
-_T_SCHEMAS: dict[tuple[str, str], object] = {}
+# read, measured), so infer once per table and pass it explicitly
+# afterwards. The memo is keyed on the table's file identity (mtime_ns,
+# size): a table regenerated in-process, say with a new column, is
+# re-inferred instead of read with its old schema. This caches plan
+# METADATA only — every query still scans the parquet data itself.
+_T_SCHEMAS: dict[str, tuple[tuple[int, int], object]] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (sf_dir, name)
-    schema = _T_SCHEMAS.get(key)
-    if schema is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _T_SCHEMAS[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    st = os.stat(path)
+    ident = (st.st_mtime_ns, st.st_size)
+    hit = _T_SCHEMAS.get(path)
+    if hit is not None and hit[0] == ident:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _T_SCHEMAS[path] = (ident, df.schema)
+    return df
 
 
 def _sf_scale(sf_dir: str) -> float:

@@ -25,7 +25,11 @@ def spread_input(df, key_col: str | None = None, min_parts: int | None = None):
     parallelism, and NO-OP when the scan already has that many splits, so
     at-scale plans gain no exchange. The partition probe compiles the
     RDD lineage without executing it (~70 ms driver-side, repaid ~20x by
-    the parallelized stage on this host)."""
+    the parallelized stage at local[32]). A streaming DataFrame is
+    returned unchanged: it has no RDD to probe, and each micro-batch is
+    planned on its own."""
+    if df.isStreaming:
+        return df
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

@@ -10,22 +10,19 @@ dictionary side, as one vectorized Arrow batch stage):
     normalized ONCE per line and the n-gram's normalized form is a pure
     array op (array_join of the token slice) — the previous per-ngram
     double regexp_replace was ~5x the regex work for the same strings.
-  - fuzzy channel: levenshtein ratio vs every normalized label (:552-576),
-    restricted to distinct norms whose LENGTH can possibly reach the 0.8
-    cutoff against any label (sim = 1 - lev/max <= 1 - |la-lb|/max, so a
-    norm outside [T*min_label_len, max_label_len/T] provably cannot fire
-    fuzzy-direct and skips the crossjoin entirely).
-  - embedding channel: norms the fuzzy channel did not claim, scored by a
-    VECTORIZED pandas UDF (md5 hashing-trick embedding -> cosine vs the
-    tiny label set -> top-k + critical boost + softmax), one Arrow batch
-    at a time with numpy accumulation. The match decision is a pure
-    function of the normalized text, so this runs once per DISTINCT norm
-    (dictionary-matching shape; the corpus has 10x+ more occurrences than
-    distinct n-grams) — the 100 TB cost scales with vocabulary, not rows.
-    The previous all-JVM higher-order-function build of the same numbers
-    ran on the expression interpreter (no codegen) and measured ~3x
-    slower; per the north rule the Arrow batch IS the sanctioned Python
-    surface.
+  - decision pass (`decision_plan`), one pass over the fan-out: one
+    distinct() over norm; the fuzzy channel (levenshtein ratio vs every
+    normalized label, :552-576) as a crossjoin of the distinct norms with
+    the broadcast labels; then, above that aggregate, the embedding
+    channel — a VECTORIZED pandas UDF (md5 hashing-trick embedding ->
+    cosine vs the tiny label set -> top-k + critical boost + softmax),
+    one Arrow batch at a time with numpy accumulation — evaluated once
+    per DISTINCT norm (dictionary-matching shape; the corpus has 10x+
+    more occurrences than distinct n-grams), so the cost scales with
+    vocabulary, not rows. The previous all-JVM higher-order-function
+    build of the same numbers ran on the expression interpreter (no
+    codegen) and measured ~3x slower; the Arrow batch IS the sanctioned
+    Python surface.
   - dedup: highest_confidence per (conv_id, label) (:654-668) via one
     row_number window, ordering on the ROUNDED score so the python twin
     (ref_ops/hybrid.py) and the distributed run break ties identically.
@@ -34,7 +31,7 @@ dictionary side, as one vectorized Arrow batch stage):
     to the candidate table — never shuffle the fan-out).
 
 Lifecycle (`materialize=`): the candidate fan-out has two consumers
-(distinct-norm scoring, join-back). The default "none" recomputes it for
+(the decision pass, the join-back). The default "none" recomputes it for
 the join-back — the fan-out is narrow (posexplode + array ops, no
 shuffle), so the recompute costs one extra corpus scan and NOTHING is
 persisted past the call (a session-lifetime MEMORY_AND_DISK persist of a
@@ -44,13 +41,15 @@ decision pass + join-back (caller clears the session cache when done —
 the bench harness does); "staging" writes the fan-out to a temp parquet
 dir both passes read (the training-pipeline barrier pattern).
 
-The per-norm decisions are computed EAGERLY through a bounded
-count-over-localCheckpoint gate (the dedup.py pattern, round 8): at or
-under the bound the decisions become a local DataFrame and the join-back
-broadcasts it (the fan-out never shuffles); over the bound (vocabulary
-too big to broadcast safely) the join-back joins the already-
-checkpointed decision table by shuffle instead of overflowing the
-driver — never a driver collect, never a recompute of the scoring pass.
+The per-norm decisions are computed EAGERLY at call time into a
+localCheckpoint whose row count is observed on the way (the dedup.py
+bounded-gate pattern, round 8, minus the second action): at or under the
+bound the decisions come to the driver as Arrow batches, the join-back
+broadcasts them as a local relation (the fan-out never shuffles) and the
+checkpoint is dropped before the call returns; over the bound
+(vocabulary too big to broadcast safely) the join-back joins the
+checkpoint by shuffle instead of overflowing the driver. Either way no
+Python worker carries the decisions and the scoring pass never re-runs.
 """
 
 from __future__ import annotations
@@ -59,7 +58,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..ref_ops.hybrid import (
@@ -226,7 +225,13 @@ def _embed_score_udf(label_rows):
             }
         )
 
-    return F.pandas_udf(fn, "struct<label:string,final:double>")
+    # Marked nondeterministic only to pin ONE evaluation: a filter on the
+    # result of a deterministic UDF is pushed below the projection that
+    # computes it, and Spark then plans a second Arrow stage for the
+    # filter. The scores themselves are a pure function of the norm.
+    return F.pandas_udf(
+        fn, "struct<label:string,final:double>"
+    ).asNondeterministic()
 
 
 _OUT_COLS = [
@@ -250,26 +255,16 @@ def hybrid_annotate(
 ) -> DataFrame:
     """(conv_id, label, strategy, value, turn_idx, line_no, tok_start,
     ngram_size, score). With dedup=True, one highest-confidence row per
-    (conv_id, label). See the module docstring for `materialize` and the
-    bounded broadcast gate; the decision pass runs eagerly at call time."""
+    (conv_id, label). The decision pass (`decision_plan`: one read of the
+    candidate fan-out, scored once per distinct norm) runs eagerly at call
+    time into a localCheckpoint; the returned plan is the join-back of
+    those decisions onto the fan-out plus the dedup window. See the module
+    docstring for `materialize` and the bounded broadcast gate."""
     labels = labels if labels is not None else DEFAULT_TARGET_LABELS
     critical = critical if critical is not None else DEFAULT_CRITICAL
     spark = transcripts.sparkSession
     if not labels:
         return spark.createDataFrame([], _OUT_SCHEMA)
-    label_rows = [
-        (
-            lbl,
-            normalize_for_match(lbl),
-            lbl in critical,
-            embed_line(normalize_for_match(lbl).lower()),
-        )
-        for lbl in sorted(labels)
-    ]
-    label_df = spark.createDataFrame(
-        [(r[0], r[1]) for r in label_rows], "label string, norm_label string"
-    )
-
     candidates = _ngram_candidates(transcripts).filter(F.col("norm") != "")
     if materialize == "persist":
         normed = candidates.persist(StorageLevel.MEMORY_AND_DISK)
@@ -300,37 +295,32 @@ def hybrid_annotate(
     else:  # "none": narrow recompute at join-back, nothing outlives the call
         normed = candidates
 
-    decisions = decision_plan(normed, label_rows, label_df)
-    # Bounded eager gate (ADVICE r4): decisions scale with the matched
-    # VOCABULARY, which is tiny in every realistic corpus — but "always
+    # Bounded eager gate (ADVICE r4; see the module docstring): "always
     # tiny" is not a safety argument at 100 TB, so the gate counts before
-    # collecting. The count runs over an eager localCheckpoint of the
-    # decision table rather than a limit(N+1).collect(): executeTake's
-    # incremental partition ramp-up (1, 4, 16, ... of
-    # spark.sql.limit.scaleUpFactor) re-runs the post-shuffle stage —
-    # including the Arrow embedding scorer — several times over when the
-    # decisions never reach the bound, which is the common case. The
-    # checkpoint materializes the decisions exactly once as local RDD
-    # blocks (a persist-based gate measured slower: the InMemoryRelation
-    # columnar round-trip costs more than it saves); count and collect
-    # then read the blocks for free, and the over-bound fallback joins
-    # against the same materialization instead of recomputing the
-    # decision pass (bounded by the matched vocabulary; a 100 TB
-    # deployment stages this table to storage).
-    dec_c = decisions.localCheckpoint()
-    n_dec = dec_c.count()
+    # collecting. Not a limit(N+1).collect(): executeTake's partition
+    # ramp-up (1, 4, 16, ... of spark.sql.limit.scaleUpFactor) re-runs
+    # the post-shuffle stage, Arrow scorer included, several times when
+    # the decisions never reach the bound, the common case. Not a persist:
+    # the InMemoryRelation columnar round-trip measured slower than the
+    # checkpoint's plain RDD blocks.
+    seen = Observation()
+    dec_c = (
+        decision_plan(normed, labels, critical)
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_dec = seen.get["n"]
     if n_dec <= max_broadcast_decisions:
-        head = dec_c.collect()
-        dec_local = spark.createDataFrame(
-            head, "norm string, label string, strategy string, score double"
-        )
+        dec_local = spark.createDataFrame(dec_c.toPandas(), dec_c.schema)
+        # the local relation replaces the checkpoint: drop its blocks now
+        # rather than whenever the driver JVM next collects garbage
+        dec_c._jdf.queryExecution().logical().rdd().unpersist(False)
         out = normed.join(F.broadcast(dec_local), "norm")
         LAST_CALL_INFO["join"] = "broadcast-local"
-        LAST_CALL_INFO["n_decisions"] = len(head)
     else:
         out = normed.join(dec_c, "norm")
         LAST_CALL_INFO["join"] = "shuffle"
-        LAST_CALL_INFO["n_decisions"] = n_dec
+    LAST_CALL_INFO["n_decisions"] = n_dec
     out = out.select(*_CAND_KEY, "value", "label", "strategy", "score")
     if not dedup:
         return out.select(*_OUT_COLS)
@@ -345,71 +335,67 @@ def hybrid_annotate(
 
 
 def decision_plan(
-    normed: DataFrame, label_rows: list[tuple], label_df: DataFrame
+    normed: DataFrame, labels: list[str], critical: list[str]
 ) -> DataFrame:
     """Lazy per-DISTINCT-norm decision table (norm, label, strategy,
-    score): the fuzzy channel then the Arrow-batched embedding channel.
-    The match decision is a pure function of the NORMALIZED text, so each
-    distinct norm is scored once and joined back — the corpus has orders
-    of magnitude more candidate occurrences than distinct n-grams
-    (dictionary-matching shape; measured 10x+ at sf0.1)."""
-    dn = normed.select("norm").distinct()
+    score). The match decision is a pure function of the NORMALIZED text,
+    so each distinct norm is decided once and joined back (at 100
+    conversations: 90,322 candidate occurrences, 48,535 distinct norms,
+    2,637 decisions).
 
-    # --- fuzzy channel. Length gate, twice:
-    # (1) plan-time: sim = 1 - lev/max <= 1 - |la-lb|/max, so ONLY norms
-    #     with len in [T*min_label_len, max_label_len/T] can reach the
-    #     threshold against ANY label — the rest skip the crossjoin;
-    # (2) per-pair: within the window, a pair whose length gap alone puts
-    #     it under FUZZY_THRESHOLD skips the O(len^2) levenshtein and pins
-    #     its score to 0.0 (output-equivalent: sub-threshold fuzzy values
-    #     are discarded wholesale downstream).
-    lens = [len(r[1]) for r in label_rows] or [0]
-    lo, hi = FUZZY_THRESHOLD * min(lens), max(lens) / FUZZY_THRESHOLD
-    ln = F.length("norm")
-    in_win = dn.filter((ln >= lo) & (ln <= hi))
-    out_win = dn.filter((ln < lo) | (ln > hi))
+    Every distinct norm meets every label in ONE crossjoin; a pair whose
+    length gap alone puts it under the fuzzy threshold (sim = 1 - lev/max
+    <= 1 - |la-lb|/max) skips the O(len^2) levenshtein and scores 0.0.
+    The embedding scorer and the choice between the channels sit above
+    the per-norm aggregate. Do not split the norms into separately
+    planned channels by a predicate (a length window, a fuzzy outcome):
+    Catalyst pushes a deterministic filter on the grouping key below
+    distinct(), so each branch re-reads the whole fan-out and the scorer
+    runs below the exchange, on every occurrence."""
+    label_rows = [
+        (
+            lbl,
+            normalize_for_match(lbl),
+            lbl in critical,
+            embed_line(normalize_for_match(lbl).lower()),
+        )
+        for lbl in sorted(labels)
+    ]
+    # from pandas over Arrow: a LocalTableScan, where a Python list would
+    # cost a Python-worker job (applySchemaToPythonRDD) per scan
+    label_df = normed.sparkSession.createDataFrame(
+        pd.DataFrame([r[:2] for r in label_rows]),
+        "label string, norm_label string",
+    )
     mx = F.greatest(F.length("norm"), F.length("norm_label"), F.lit(1))
     gap = F.abs(F.length("norm") - F.length("norm_label"))
     fuzzy = F.when(
         gap <= (1.0 - FUZZY_THRESHOLD) * mx,
         F.lit(1.0) - F.levenshtein("norm", "norm_label") / mx,
     ).otherwise(F.lit(0.0))
-    fz = in_win.crossJoin(F.broadcast(label_df)).select(
-        "norm", "label", fuzzy.alias("fuzzy")
-    )
-    # winner per norm via min(struct(-fuzzy, label)): highest fuzzy, then
-    # lexicographically smallest label — an aggregation, not a window
-    f_agg = fz.groupBy("norm").agg(
-        F.max("fuzzy").alias("f_best"),
-        F.min(
-            F.struct((-F.col("fuzzy")).alias("nf"), F.col("label").alias("lbl"))
-        ).alias("fw"),
-    )
-    fuzzy_direct = f_agg.filter(F.col("f_best") >= FUZZY_THRESHOLD).select(
-        "norm",
-        F.col("fw.lbl").alias("label"),
-        F.lit("fuzzy-direct").alias("strategy"),
-        F.round(-F.col("fw.nf"), 6).alias("score"),
-    )
-
-    # --- embedding channel: norms the fuzzy channel did not claim (the
-    # sub-threshold window norms plus everything outside the window),
-    # scored by the vectorized Arrow stage
-    emb_norms = (
-        f_agg.filter(F.col("f_best") < FUZZY_THRESHOLD)
-        .select("norm")
-        .unionByName(out_win)
+    # fuzzy winner per norm via min(struct(-fuzzy, label)): highest fuzzy,
+    # then lexicographically smallest label — an aggregation, not a window
+    fw = (
+        normed.select("norm")
+        .distinct()
+        .crossJoin(F.broadcast(label_df))
+        .groupBy("norm")
+        .agg(F.min(F.struct((-fuzzy).alias("nf"), "label")).alias("fw"))
     )
     d = _embed_score_udf(label_rows)(F.col("norm"))
-    emb_best = (
-        emb_norms.select("norm", d.alias("d"))
-        .filter(F.col("d.label").isNotNull())
+    direct = F.col("f_best") >= FUZZY_THRESHOLD
+    pick = lambda fz, emb: F.when(direct, fz).otherwise(emb)  # noqa: E731
+    scored = fw.select(
+        "norm", (-F.col("fw.nf")).alias("f_best"), "fw", d.alias("d")
+    )
+    return (
+        scored.filter(direct | F.col("d.label").isNotNull())
         .select(
             "norm",
-            F.col("d.label").alias("label"),
-            F.lit("embedding-softmax").alias("strategy"),
-            F.round("d.final", 6).alias("score"),
+            pick(F.col("fw.label"), F.col("d.label")).alias("label"),
+            pick(F.lit("fuzzy-direct"), F.lit("embedding-softmax")).alias(
+                "strategy"
+            ),
+            F.round(pick(F.col("f_best"), F.col("d.final")), 6).alias("score"),
         )
     )
-
-    return fuzzy_direct.unionByName(emb_best)

@@ -74,3 +74,18 @@ def test_every_query_has_an_oracle():
     """Round 4 closed the last rows-only gap (q_media_frames): every
     registry query now carries a hash oracle. Keep it that way."""
     assert set(QUERIES) - set(ORACLES) == set()
+
+
+def test_table_schema_memo_follows_rewritten_table(spark, tmp_path):
+    """`_t` memoizes each table's schema; a table rewritten in-process
+    with an extra column must be read with its new schema, not the
+    memoized one."""
+    import pandas as pd
+
+    path = tmp_path / "t.parquet"
+    pd.DataFrame({"a": [1, 2]}).to_parquet(path)
+    assert entrymod._t(spark, str(tmp_path), "t").columns == ["a"]
+    pd.DataFrame({"a": [1, 2], "b": ["x", "y"]}).to_parquet(path)
+    df = entrymod._t(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]

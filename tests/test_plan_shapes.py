@@ -330,37 +330,51 @@ def test_hybrid_joinback_broadcasts_decisions(spark, tr):
     assert _count(plan, "SortMergeJoin") == 0, plan[:800]
 
 
+def _plan_nodes(df) -> list[tuple[str, tuple[str, ...]]]:
+    """(node name, names of its ancestors) for every node of the physical
+    plan, walked on the JVM tree (AQE's plan as planned, before it runs)."""
+
+    def walk(node, above):
+        yield node.nodeName(), above
+        kids = node.children()
+        for k in range(kids.size()):
+            yield from walk(kids.apply(k), above + (node.nodeName(),))
+
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    return list(walk(root, ()))
+
+
 def test_hybrid_decision_plan_is_arrow_batched(spark, tr):
-    """The embedding channel of the decision pass is Arrow-batched python
-    (no interpreter-bound HOF scoring), and its only nested-loop joins
-    are the tiny label crossjoins."""
+    """The decision pass reads the candidate fan-out ONCE (one evaluation
+    of the input subtree), scores with ONE Arrow-batched python stage that
+    sits above every exchange (so it sees distinct norms, not candidate
+    occurrences), builds its label side without a Python-worker scan, and
+    has one nested-loop join: the crossjoin of distinct norms with the
+    tiny label set."""
     from marie_ai_spark.operators import hybrid as H
     from marie_ai_spark.ref_ops.hybrid import (
         DEFAULT_CRITICAL,
         DEFAULT_TARGET_LABELS,
-        normalize_for_match,
     )
-    from marie_ai_spark.ref_ops.spans_engine import embed_line
-
-    label_rows = [
-        (
-            lbl,
-            normalize_for_match(lbl),
-            lbl in DEFAULT_CRITICAL,
-            embed_line(normalize_for_match(lbl).lower()),
-        )
-        for lbl in sorted(DEFAULT_TARGET_LABELS)
-    ]
-    label_df = spark.createDataFrame(
-        [(r[0], r[1]) for r in label_rows], "label string, norm_label string"
-    )
-    from pyspark.sql import functions as F
 
     normed = H._ngram_candidates(tr).filter(F.col("norm") != "")
-    plan = _plan(H.decision_plan(normed, label_rows, label_df))
-    assert _count(plan, "ArrowEvalPython") >= 1, plan[:800]
-    assert _count(plan, "BroadcastNestedLoopJoin") <= 2, plan[:800]
-    assert _count(plan, "SortMergeJoin") == 0, plan[:800]
+    dec = H.decision_plan(normed, DEFAULT_TARGET_LABELS, DEFAULT_CRITICAL)
+    plan = _plan(dec)
+    assert _count(plan, "MapInPandas") == 1, plan
+    assert _count(plan, "ArrowEvalPython") == 1, plan
+    assert _count(plan, "BatchEvalPython") == 0, plan
+    assert _count(plan, "BroadcastNestedLoopJoin") == 1, plan
+    assert _count(plan, "SortMergeJoin") == 0, plan
+    for name, above in _plan_nodes(dec):
+        if name == "ArrowEvalPython":
+            assert not [a for a in above if "Exchange" in a], (above, plan)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    formatted = dec._jdf.queryExecution().explainString(mode)
+    assert "applySchemaToPythonRDD" not in formatted, formatted
 
 
 def test_temperature_mixture_broadcasts_rates(spark):

@@ -545,9 +545,13 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
         (r.vec_id, r.scale, tuple(r.qembedding))
         for r in quantize_int8(emb).collect()
     }
+    out_dims = (8, 128)
     want_p = {
-        (r.vec_id, tuple(r.projected))
-        for r in hash_project(emb, out_dim=8, seed=1).collect()
+        o: {
+            (r.vec_id, tuple(r.projected))
+            for r in hash_project(emb, out_dim=o, seed=1).collect()
+        }
+        for o in out_dims
     }
     want_b = {
         (r.vec_id, tuple(r.bits))
@@ -564,7 +568,10 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
     src = spark.readStream.schema(emb.schema).parquet(stream_dir)
     for name, df in (
         ("quant_stream", quantize_int8(src)),
-        ("proj_stream", hash_project(src, out_dim=8, seed=1, dim=d)),
+        *(
+            (f"proj{o}_stream", hash_project(src, out_dim=o, seed=1, dim=d))
+            for o in out_dims
+        ),
         ("bits_stream", binarize_embeddings(src, dim=d)),
     ):
         q = (
@@ -581,10 +588,13 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
         ).collect()
     }
     got_p = {
-        (r.vec_id, tuple(r.projected))
-        for r in spark.sql(
-            "select vec_id, projected from proj_stream"
-        ).collect()
+        o: {
+            (r.vec_id, tuple(r.projected))
+            for r in spark.sql(
+                f"select vec_id, projected from proj{o}_stream"
+            ).collect()
+        }
+        for o in out_dims
     }
     got_b = {
         (r.vec_id, tuple(r.bits))
@@ -593,5 +603,6 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
         ).collect()
     }
     assert got_q == want_q and got_q
-    assert got_p == want_p and got_p
+    for o in out_dims:
+        assert got_p[o] == want_p[o] and got_p[o], o
     assert got_b == want_b and got_b

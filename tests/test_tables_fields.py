@@ -607,15 +607,15 @@ def test_hybrid_staging_materialize_identical(spark, corpus_sdf, tmp_path):
 
 
 def test_hybrid_fallback_plan_is_lazy_shuffle_join(spark, corpus_sdf):
-    """Pin the PHYSICAL shape of the two gate outcomes. Under the bound
-    the decisions are an eagerly-collected local DataFrame broadcast
-    back (no Python stage left in the returned plan — scoring already
-    happened); over the bound (round 8 shape) the decisions are NEVER
-    collected to the driver: the gate's eager localCheckpoint already
-    materialized them as executor-local blocks, so the returned plan
-    joins that checkpointed scan (ExistingRDD — no re-run of the Arrow
-    scoring stage, no broadcast of the decision side) and the count gate
-    still reports the decision volume."""
+    """Pin the PHYSICAL shape of the two gate outcomes. The gate's eager
+    localCheckpoint materializes the decisions once, so neither returned
+    plan re-runs the Arrow scoring stage. Under the bound the decisions
+    come back to the driver as Arrow batches and are broadcast as a local
+    relation (LocalTableScan; no Python-list DataFrame, whose
+    applySchemaToPythonRDD scan would cost a Python-worker job); over the
+    bound (round 8 shape) they are NEVER collected to the driver: the
+    shuffle join reads the checkpointed blocks (ExistingRDD), and the
+    observed count still reports the decision volume."""
     from marie_ai_spark.operators import hybrid
     from marie_ai_spark.operators.hybrid import hybrid_annotate
 
@@ -624,6 +624,7 @@ def test_hybrid_fallback_plan_is_lazy_shuffle_join(spark, corpus_sdf):
     assert hybrid.LAST_CALL_INFO["join"] == "broadcast-local"
     assert hybrid.LAST_CALL_INFO["n_decisions"] > 0
     assert "ArrowEvalPython" not in fast_plan
+    assert "ExistingRDD" not in fast_plan
 
     slow = hybrid_annotate(corpus_sdf, max_broadcast_decisions=0)
     slow_plan = slow._jdf.queryExecution().executedPlan().toString()
