@@ -262,9 +262,10 @@ def q_simhash(spark, sf):
 
 
 def q_dup_clusters(spark, sf):
-    """Duplicate clustering: connected components (min-label propagation)
-    over the MinHash-LSH candidate pairs; oracle is a DuckDB recursive-CTE
-    reachability closure — a fully independent algorithm."""
+    """Duplicate clustering: connected components (driver union-find under
+    the pair bound, star rounds above it) over the MinHash-LSH candidate
+    pairs; oracle is a DuckDB recursive-CTE reachability closure — a
+    fully independent algorithm."""
     pairs = dedup.minhash_lsh_candidates(_t(spark, sf, "documents"), n=3)
     return dedup.duplicate_clusters(pairs)
 
@@ -515,9 +516,8 @@ def q_lang_id_pretrained(spark, sf):
     """The 100-TB shape of language ID: train-once profile (model state)
     + classify-only apply. The apply is the dictionary-pattern stateless
     UDF (lang_id_classify_stream) — the same code path that serves an
-    unbounded stream, row-equal to the relational plan-gated
-    lang_id_classify by test. Output identical to q_lang_id, so it
-    shares that oracle."""
+    unbounded stream. Output identical to q_lang_id, so it shares that
+    oracle."""
     docs = _t(spark, sf, "documents")
     rows = [
         r.asDict()
@@ -529,8 +529,7 @@ def q_lang_id_pretrained(spark, sf):
 def q_fluency_pretrained(spark, sf):
     """Train/apply split of the CCNet-style fluency proxy: pretrained
     (lang, trigram) profile + the stateless dictionary apply
-    (fluency_classify_stream), bit-equal to the relational plan-gated
-    fluency_classify by test. Output identical to q_fluency, so it
+    (fluency_classify_stream). Output identical to q_fluency, so it
     shares that oracle."""
     docs = _t(spark, sf, "documents")
     rows = [
@@ -649,10 +648,8 @@ def q_classify_vote_diff(spark, sf):
 
 def q_embed_neardup(spark, sf):
     """Near-dup pairs blocked on the label column (the equality blocking
-    key standing in for an LSH bucket at this data shape). Scored by the
-    Arrow block scorer — row-identical to the relational
-    cosine_neardup_pairs fold (test-asserted; the raw cosine arithmetic
-    is bit-equal and rounding/threshold stay JVM-side)."""
+    key standing in for an LSH bucket at this data shape), scored by the
+    Arrow block scorer (rounding/threshold stay JVM-side)."""
     return similarity.cosine_neardup_pairs_arrow(
         _t(spark, sf, "embeddings"), threshold=0.45, block_col="label"
     )
@@ -817,8 +814,8 @@ def q_split_leakage(spark, sf):
 def q_kmeans(spark, sf):
     """Distributed Lloyd's k-means (round 7): centroids trained over the
     FULL embeddings table — not a driver sample — with fixed-point
-    re-centering (floor(x*1e6) summed exactly), then a final JVM argmin
-    assignment. The fixed-point sums make training bit-deterministic
+    re-centering (floor(x*1e6) summed exactly), then a final Arrow
+    nearest-centroid assignment. The fixed-point sums make training bit-deterministic
     across partition layouts, so the oracle unrolls the same two Lloyd
     iterations in SQL and must land on identical clusters."""
     emb = _t(spark, sf, "embeddings")
@@ -843,7 +840,8 @@ def q_hash_project(spark, sf):
     """Feature-hash (sign-random JL) projection (round 7): 64 -> 8 dims
     with a sign matrix derived from md5('proj|seed|i|j') — never
     materialized as data, so the oracle reconstructs the identical
-    projection from the formula alone. Scan-local, no UDF, no shuffle."""
+    projection from the formula alone. One scan-local Arrow stage, no
+    shuffle."""
     p = similarity.hash_project(
         _t(spark, sf, "embeddings"), out_dim=8, seed=1
     )
@@ -1442,7 +1440,8 @@ def _semantic_dedup_oracle_sql() -> str:
     default; local harnesses export SPARK_GRAFT_ORACLE_SF_DIR) by the
     numpy twin and embedded as full-precision literals; cell assignment
     (argmin distance, ties to the lowest cell — list_distance is the
-    monotone sqrt of the Spark fold, so the ranking agrees) and the
+    monotone sqrt of the engine's index-order sum, so the ranking
+    agrees) and the
     within-cell lowest-id near-dup drop are re-derived in SQL."""
     import os
 
@@ -3190,9 +3189,9 @@ def oracle_sql() -> dict[str, str]:
                    for i in range(1, len(v)+1)]) AS t(u)
     """
     # feature-hash projection: the sign matrix is re-derived from
-    # md5('proj|seed|i|j') hex parity — same formula the engine bakes
-    # into its plan literals; the left-fold sum and the multiply-by-
-    # reciprocal normalizer replicate Spark's IEEE evaluation order
+    # md5('proj|seed|i|j') hex parity — same formula the engine's Arrow
+    # stage rebuilds per task; the left-fold sum and the multiply-by-
+    # reciprocal normalizer replicate its IEEE evaluation order
     sqls["q_hash_project"] = """
         SELECT vec_id, j::INT AS j,
                list_sum([v[i] * (CASE WHEN ('0x' || substr(md5(

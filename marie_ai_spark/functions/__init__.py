@@ -9,8 +9,6 @@ which differ.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -37,28 +35,6 @@ def spread_input(df, key_col: str | None = None, min_parts: int | None = None):
     if key_col is not None:
         return df.repartition(target, key_col)
     return df.repartition(target)
-
-
-def char_kgrams(col, k: int) -> Column:
-    """All character k-grams of a string column, in position order, as a
-    VECTORIZED Arrow batch (python slicing is O(1) per window).
-    SQL: [substring(x, i, k) for i in range(1, greatest(length(x)-k+1, 0) + 1)]
-    — identical character semantics; the JVM higher-order equivalent
-    (transform(sequence(...), i -> substring(x, i, k))) is AVOIDED in
-    engine plans because UTF8String.substring walks from the string start
-    per call, making the column O(len^2) per row (measured ~10x slower on
-    document-length strings; see operators/textstats._with_tri)."""
-    c = F.col(col) if isinstance(col, str) else col
-
-    @F.pandas_udf("array<string>")
-    def kg(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: [t[i : i + k] for i in range(len(t) - k + 1)]
-            if t is not None
-            else None
-        )
-
-    return kg(c)
 
 
 def tokens(col) -> Column:

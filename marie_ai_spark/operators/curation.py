@@ -327,8 +327,9 @@ def token_budget_sample(
          at all; buckets wholly past the budget drop; the ONE boundary
          bucket per source runs the exact per-doc window over ~1/4096
          of the domain.
-    Output row-identical to the single window (test-asserted); returns
-    the kept input rows.
+    Output row-identical to one source-partitioned running-sum window
+    (the DuckDB oracle's shape, test-asserted); returns the kept input
+    rows.
     """
     pr = _tb_priority(key_col)
     base = (
@@ -375,34 +376,6 @@ def token_budget_sample(
     ).filter(F.col("_tb_cum") <= F.col("_tb_budget"))
     return whole.drop(*aux).unionByName(
         boundary_kept.drop(*aux, "_tb_cum")
-    )
-
-
-def token_budget_sample_window(
-    df: DataFrame,
-    source_col: str,
-    budgets: dict[str, int],
-    key_col: str,
-    token_col: str,
-    default_budget: int = 0,
-) -> DataFrame:
-    """Single-window reference form of token_budget_sample (the oracle
-    shape): one running sum partitioned by source. Correct at any scale
-    that tolerates the head-domain partition; used by the equivalence
-    test and as the SQL-oracle twin."""
-    w = (
-        Window.partitionBy(source_col)
-        .orderBy("_tb_pr", key_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        df.withColumn("_tb_pr", _tb_priority(key_col))
-        .withColumn(
-            "_tb_budget", _budget_expr(source_col, budgets, default_budget)
-        )
-        .withColumn("_tb_cum", F.sum(token_col).over(w))
-        .filter(F.col("_tb_cum") <= F.col("_tb_budget"))
-        .drop("_tb_pr", "_tb_budget", "_tb_cum")
     )
 
 

@@ -306,7 +306,6 @@ def duplicate_clusters(
     pairs: DataFrame,
     max_iter: int = 25,
     driver_threshold: int | None = 1_000_000,
-    algo: str = "star",
 ) -> DataFrame:
     """Connected components over near-dup candidate pairs -> duplicate
     clusters: (doc_id, cluster_id) with cluster_id = the component's
@@ -317,16 +316,14 @@ def duplicate_clusters(
     `driver_threshold` pairs, the edge list is bounded metadata — a
     driver-side union-find finishes in milliseconds where the iterative
     plan pays several scheduler round-trips per step. Above it (the
-    100 TB regime) the default distributed path is LARGE-STAR/SMALL-STAR
+    100 TB regime) the distributed path is LARGE-STAR/SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond"):
     alternating star rounds converge in O(log^2 n) iterations REGARDLESS
     of component diameter, so an adversarial million-node chain costs
-    ~log rounds, not a million propagation steps. algo="min_label" keeps
-    the one-join-per-hop propagation (O(diameter) iterations — fine for
-    the short chains real near-dup components form, pathological for long
-    paths). All paths produce identical labels; a RuntimeError is raised
-    if the iteration budget is exhausted before convergence rather than
-    silently emitting partial labels.
+    ~log rounds, not a million propagation steps. Both paths produce
+    identical labels; a RuntimeError is raised if the star rounds exhaust
+    `max_iter` before convergence rather than silently emitting partial
+    labels.
     """
     if driver_threshold is not None:
         # Gate by count-over-a-localCheckpoint instead of
@@ -372,11 +369,7 @@ def duplicate_clusters(
     edges = src.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    if algo == "star":
-        return _cc_star(edges, max_iter)
-    if algo == "min_label":
-        return _cc_min_label(edges, max_iter)
-    raise ValueError(f"unknown cc algorithm: {algo}")
+    return _cc_star(edges, max_iter)
 
 
 def _edges_equal(e2: DataFrame, e: DataFrame, n_prev: int, n_new: int) -> bool:
@@ -390,7 +383,7 @@ def _edges_equal(e2: DataFrame, e: DataFrame, n_prev: int, n_new: int) -> bool:
     signature whose (astronomically unlikely but nonzero) collision
     between successive distinct edge sets would have ended the loop
     early with wrong labels — the docstring contract is identical labels
-    across algorithms, so the check must be exact."""
+    on the driver and distributed paths, so the check must be exact."""
     if n_prev != n_new:
         return False
     return e2.join(e, ["a", "b"], "left_anti").limit(1).count() == 0
@@ -463,60 +456,6 @@ def _cc_star(edges: DataFrame, max_iter: int, stats: dict | None = None) -> Data
             e.select(F.col("b").alias("doc_id"), F.col("b").alias("cluster_id"))
         )
         .distinct()
-    )
-
-
-def _cc_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Min-label propagation: one join per hop, O(diameter) iterations.
-    Kept for the short-chain regime; raises instead of returning partial
-    labels when the budget is exhausted."""
-    # cache the symmetric edge list: every iteration issues two actions
-    # (propagation join + convergence count) and would otherwise re-run
-    # the whole candidate-generation subtree (e.g. MinHash banding) per
-    # action — measured 20s -> ~4s at sf0.1
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
-    labels = (
-        sym.select(F.col("src").alias("v"))
-        .distinct()
-        .withColumn("comp", F.col("v"))
-        .localCheckpoint()
-    )
-    converged = False
-    for _ in range(max_iter):
-        neigh = (
-            sym.join(labels, sym.dst == labels.v)
-            .groupBy("src")
-            .agg(F.min("comp").alias("n_comp"))
-        )
-        nxt = F.least(F.col("comp"), F.coalesce("n_comp", F.col("comp")))
-        # localCheckpoint (not cache): each iteration's plan embeds the
-        # previous one TWICE (via neigh and via the join), so lineage —
-        # and optimizer memory — doubles per iteration without truncation;
-        # a long-diameter component would OOM the driver around iteration
-        # ~15. The checkpoint materializes the labels and cuts the plan.
-        # The convergence flag rides along in the SAME projection, so each
-        # iteration costs exactly one join+agg and one count action.
-        new_labels = (
-            labels.join(neigh, labels.v == neigh.src, "left")
-            .select("v", nxt.alias("comp"), (nxt < F.col("comp")).alias("chg"))
-            .localCheckpoint()
-        )
-        changed = new_labels.filter("chg").count()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"duplicate_clusters(min_label) did not converge in {max_iter} "
-            "iterations (component diameter exceeds the budget); use the "
-            "default algo='star' path"
-        )
-    return labels.select(
-        F.col("v").alias("doc_id"), F.col("comp").alias("cluster_id")
     )
 
 

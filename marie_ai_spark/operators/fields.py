@@ -59,14 +59,6 @@ def alphanumeric_expr(v):
     )
 
 
-def transform_expr(v, field_type):
-    if field_type == "MONEY":
-        return money_expr(v)
-    if field_type == "ALPHA_NUMERIC":
-        return alphanumeric_expr(v)
-    return F.trim(v)  # ALPHA default (transform.py:160)
-
-
 def entity_majority_vote(
     responses: DataFrame, doc_key: str, entity: str, value: str
 ) -> DataFrame:

@@ -30,16 +30,12 @@ dictionary side, as one vectorized Arrow batch stage):
     explicit broadcast (decisions ~ matched vocabulary, always tiny next
     to the candidate table — never shuffle the fan-out).
 
-Lifecycle (`materialize=`): the candidate fan-out has two consumers
-(the decision pass, the join-back). The default "none" recomputes it for
-the join-back — the fan-out is narrow (posexplode + array ops, no
-shuffle), so the recompute costs one extra corpus scan and NOTHING is
-persisted past the call (a session-lifetime MEMORY_AND_DISK persist of a
-bigger-than-corpus relation is exactly what a 100 TB job must not
-accumulate). "persist" caches the fan-out for the duration of the
-decision pass + join-back (caller clears the session cache when done —
-the bench harness does); "staging" writes the fan-out to a temp parquet
-dir both passes read (the training-pipeline barrier pattern).
+Lifecycle: the candidate fan-out has two consumers (the decision pass,
+the join-back), and the join-back recomputes it — the fan-out is narrow
+(posexplode + array ops, no shuffle), so the recompute costs one extra
+corpus scan and NOTHING is persisted past the call (a session-lifetime
+persist of a bigger-than-corpus relation is exactly what a 100 TB job
+must not accumulate).
 
 The per-norm decisions are computed EAGERLY at call time into a
 localCheckpoint whose row count is observed on the way (the dedup.py
@@ -57,7 +53,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -249,9 +244,7 @@ def hybrid_annotate(
     labels: list[str] | None = None,
     critical: list[str] | None = None,
     dedup: bool = True,
-    materialize: str = "none",
     max_broadcast_decisions: int = 2_000_000,
-    staging_dir: str | None = None,
 ) -> DataFrame:
     """(conv_id, label, strategy, value, turn_idx, line_no, tok_start,
     ngram_size, score). With dedup=True, one highest-confidence row per
@@ -259,41 +252,14 @@ def hybrid_annotate(
     candidate fan-out, scored once per distinct norm) runs eagerly at call
     time into a localCheckpoint; the returned plan is the join-back of
     those decisions onto the fan-out plus the dedup window. See the module
-    docstring for `materialize` and the bounded broadcast gate."""
+    docstring for the fan-out lifecycle and the bounded broadcast gate."""
     labels = labels if labels is not None else DEFAULT_TARGET_LABELS
     critical = critical if critical is not None else DEFAULT_CRITICAL
     spark = transcripts.sparkSession
     if not labels:
         return spark.createDataFrame([], _OUT_SCHEMA)
-    candidates = _ngram_candidates(transcripts).filter(F.col("norm") != "")
-    if materialize == "persist":
-        normed = candidates.persist(StorageLevel.MEMORY_AND_DISK)
-    elif materialize == "staging":
-        # The staging write happens on EXECUTORS, so a driver-local
-        # tempdir only works in local mode — on a cluster the caller must
-        # hand us a shared path (HDFS/S3/checkpoint volume). A caller-
-        # provided staging_dir is caller-owned (no cleanup here, the
-        # returned DataFrame reads it lazily); the local-mode default is
-        # reaped at process exit.
-        if staging_dir is not None:
-            path = staging_dir
-        elif spark.sparkContext.master.startswith("local"):
-            import atexit
-            import shutil
-            import tempfile
-
-            path = tempfile.mkdtemp(prefix="hybrid_cand_")
-            atexit.register(shutil.rmtree, path, ignore_errors=True)
-        else:
-            raise ValueError(
-                "materialize='staging' on a non-local master requires an "
-                "explicit staging_dir reachable by every executor (a "
-                "driver-local tempdir is not)"
-            )
-        candidates.write.mode("overwrite").parquet(path)
-        normed = spark.read.parquet(path)
-    else:  # "none": narrow recompute at join-back, nothing outlives the call
-        normed = candidates
+    # recomputed at join-back (narrow); nothing outlives the call
+    normed = _ngram_candidates(transcripts).filter(F.col("norm") != "")
 
     # Bounded eager gate (ADVICE r4; see the module docstring): "always
     # tiny" is not a safety argument at 100 TB, so the gate counts before

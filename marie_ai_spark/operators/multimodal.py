@@ -35,12 +35,6 @@ MEDIA_SCHEMA = (
 _MAGIC = b"FAKEMEDIA1"
 
 
-def _fake_payload(asset_id: str, kind: str, width: int, height: int,
-                  n_frames: int) -> bytes:
-    body = hashlib.md5(f"{asset_id}:{kind}".encode()).digest() * 4
-    return _MAGIC + _struct.pack("<III", width, height, n_frames) + body
-
-
 def _pixels(asset_id: str, n: int) -> bytes:
     """Deterministic pseudo-image content: md5 keystream over the id."""
     out = b""
@@ -54,8 +48,8 @@ def _pixels(asset_id: str, n: int) -> bytes:
 def gen_media_rows(n_assets: int = 100, seed: int = 42) -> list:
     """Deterministic synthetic media rows with REAL container bytes:
     images cycle valid PNG (full pixel payload) / JPEG (SOF header
-    stream) / GIF (89a descriptor); audio is complete mono PCM16 WAV.
-    Video remains the documented codec seam (FAKEMEDIA1 stub payload).
+    stream) / GIF (89a descriptor); audio is complete mono PCM16 WAV;
+    video is an ISO BMFF container with real sample tables.
     Pure python (no Spark) so fixture oracles can re-derive independently."""
     from marie_ai_spark.ref_ops import media as m
 

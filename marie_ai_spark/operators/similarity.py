@@ -66,76 +66,27 @@ def lsh_topk(
     return brute_force_topk(bucketed.select("vec_id", "embedding"), query_vec, k)
 
 
-def cosine_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.45,
-    block_col: str | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (verification stage).
-
-    Pair generation is quadratic, so at scale it MUST be restricted to
-    candidates: pass `block_col` (an equality blocking key — a cluster
-    label, or a `hyperplane_signature` LSH bucket) so the self-join is an
-    equi-join on the block, never a cross join. Norms are precomputed once
-    per vector (one narrow pass) so each pair costs a single dot product;
-    the dot is a sequential left-to-right fold, bit-identical to the SQL
-    oracle's list_dot_product.
-    """
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p * q),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    cols = ["vec_id", F.col("embedding").cast("array<double>").alias("v")]
-    if block_col:
-        cols.append(F.col(block_col).alias("_blk"))
-    e = embeddings.select(*cols).withColumn("norm", F.sqrt(dot(F.col("v"), F.col("v"))))
-    a, b = e.alias("a"), e.alias("b")
-    cond = F.col("a.vec_id") < F.col("b.vec_id")
-    if block_col:
-        join = a.join(b, (F.col("a._blk") == F.col("b._blk")) & cond)
-    else:
-        join = a.join(b, cond)
-    den = F.col("a.norm") * F.col("b.norm")
-    return (
-        join.select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(
-                F.when(den != 0, dot(F.col("a.v"), F.col("b.v")) / den), 4
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
 def cosine_neardup_pairs_arrow(
     embeddings: DataFrame,
     threshold: float = 0.45,
     block_col: str = "label",
 ) -> DataFrame:
-    """Arrow fast path for blocked cosine near-dup pairs — the
-    _cell_neardup_drops numpy arithmetic (guide §4.2), emitting the PAIRS
-    instead of the drop set. Row-identical to
-    cosine_neardup_pairs(block_col=...) (test-asserted):
+    """Embedding-cosine near-duplicate pairs (verification stage), scored
+    one Arrow group per block.
 
-      - dot products / norms accumulate in index order (np.cumsum running
-        sum == the JVM fold's left-to-right order), float32 -> float64
-        widening exact, IEEE division identical — so the raw cosine is
-        BIT-EQUAL to the relational fold;
-      - the 4-decimal HALF_UP rounding and the final threshold filter stay
-        JVM-SIDE on that raw cosine (the exact expressions the relational
-        form evaluates); numpy only pre-filters with a 1e-3 margin below
-        the threshold, so every pair the exact filter could keep survives
-        the pre-filter.
-
-    Scale shape is unchanged: one exchange on the block key (the same key
-    the relational self-join shuffles on past broadcast size), per-block
-    pair scoring, output bounded by the above-threshold pairs. The JVM
-    higher-order fold scores ~10x slower per pair (expression
-    interpreter, no codegen) — measured 3.2s -> ~0.8s at sf0.1."""
+    Pair generation is quadratic, so it is restricted to candidates:
+    `block_col` is an equality blocking key (a cluster label, an IVF
+    cell, or a `hyperplane_signature` LSH bucket), so the plan has one
+    exchange on the block key and never a cross join. Within a block,
+    norms are computed once per vector and each pair costs one dot
+    product. Dot products and norms accumulate in index order (np.cumsum
+    running sum, float32 -> float64 widening exact), so the raw cosine
+    equals the SQL oracle's left-to-right list_dot_product fold. The
+    4-decimal HALF_UP rounding and the threshold filter run JVM-side on
+    that raw cosine; numpy only pre-filters with a 1e-3 margin below the
+    threshold, so every pair the exact filter could keep survives.
+    Output is (vec_a < vec_b, cos_sim), bounded by the above-threshold
+    pairs."""
     import numpy as np
     import pandas as pd
 
@@ -255,8 +206,8 @@ def train_kmeans_full(
     """Distributed Lloyd's k-means over the FULL corpus — the scale path
     past the driver-sampled quantizer (train_ivf_centroids trains on a
     bounded sample; at 100 TB the sample can misplace tail clusters).
-    Each iteration is one corpus pass: JVM argmin assignment (the same
-    expression the IVF quantizer uses — scan-local, no shuffle), then a
+    Each iteration is one corpus pass: the Arrow nearest-centroid scorer
+    ivf_assign uses (scan-local, no shuffle), then a
     groupBy(cell) with one fixed-point SUM per dimension. Partial (map-
     side) aggregation collapses every task to k rows of d sums before the
     shuffle, so the exchanged data is k*d*tasks numbers regardless of
@@ -290,18 +241,7 @@ def train_kmeans_full(
     v = F.col("embedding").cast("array<double>")
     qlit = F.lit(float(quant))
     for _ in range(iters):
-        # assignment per ivf_assign's auto rule: above ARROW_ASSIGN_MIN_KD
-        # the Arrow scorer replaces the k*d-literal argmin — bit-equal
-        # (tested), and each Lloyd iteration otherwise pays a fresh
-        # Catalyst compile of the literal tree
-        if k * dim < ARROW_ASSIGN_MIN_KD:
-            assigned = embeddings.select(
-                v.alias("v"), _nearest_centroid_col(cent).alias("cell")
-            )
-        else:
-            assigned = _assign_arrow(
-                embeddings.select(v.alias("v")), cent, "v"
-            )
+        assigned = _assign_arrow(embeddings.select(v.alias("v")), cent, "v")
         rows = (
             assigned.groupBy("cell")
             .agg(
@@ -372,7 +312,6 @@ def hash_project(
     out_dim: int = 8,
     seed: int = 1,
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Feature-hash (sign-random) projection — Achlioptas/JL-style
     dimensionality reduction with a matrix that is never materialized as
@@ -380,85 +319,42 @@ def hash_project(
     md5('proj|seed|i|j'), so any engine (and the DuckDB oracle)
     reconstructs the exact same projection from the formula alone.
     out[j] = sum_i v[i] * sign(i, j) / sqrt(out_dim), folded in index
-    order (deterministic IEEE sums). The signs are baked into the plan
-    as literals: scan-local narrow projection, no shuffle, no UDF —
-    the 100 TB path to cheaper ANN (project, then IVF the short
-    vectors; re-rank survivors on the originals).
-
-    `dim` (the input dimensionality) is inferred with a one-row probe
-    when omitted; pass it explicitly for STREAMING inputs — a streaming
-    plan cannot run the probe, and the projection itself is a pure
-    per-row expression that applies identically on ingest (parity
-    tested in tests/test_streaming.py).
-
-    Above HASH_PROJECT_MAX_LITERALS sign literals (VERDICT r7 item 3:
-    d=1536 x out_dim=256 is ~400k literals in one projection — a
-    Catalyst-stalling plan), the projection runs as an Arrow stage whose
-    sign matrix is built once per task from the IDENTICAL md5 formula;
-    the fold accumulates in index order (np.cumsum), so results are
-    bit-equal to the literal form (parity-tested)."""
+    order (np.cumsum running sum, deterministic IEEE adds). One Arrow
+    stage, scan-local, no shuffle: each task rebuilds the d x out_dim
+    sign matrix for the d of the vectors it reads, so the plan carries
+    no literals and needs no driver-side probe of d. The same plan
+    applies unchanged to a STREAMING input (parity tested in
+    tests/test_streaming.py) — the 100 TB path to cheaper ANN (project,
+    then IVF the short vectors; re-rank survivors on the originals)."""
     import hashlib
     import math
-
-    d = dim if dim is not None else len(embeddings.select(vec_col).first()[0])
-    inv = 1.0 / math.sqrt(float(out_dim))
-
-    def sign(i: int, j: int) -> float:
-        h = hashlib.md5(f"proj|{seed}|{i}|{j}".encode()).hexdigest()
-        return 1.0 if int(h[0], 16) % 2 == 0 else -1.0
-
-    if d * out_dim > HASH_PROJECT_MAX_LITERALS:
-        return _hash_project_arrow(
-            embeddings, out_dim, seed, vec_col, d, inv
-        )
-
-    v = F.col(vec_col).cast("array<double>")
-    outs = []
-    for j in range(out_dim):
-        signs = F.array(*[F.lit(sign(i, j)) for i in range(d)])
-        s = F.aggregate(
-            F.zip_with(v, signs, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        outs.append(s * F.lit(inv))
-    return embeddings.withColumn("projected", F.array(*outs))
-
-
-# d*out_dim above which hash_project derives its sign matrix inside an
-# Arrow stage instead of baking it into the plan as literals
-HASH_PROJECT_MAX_LITERALS = 4096
-
-
-def _hash_project_arrow(
-    embeddings: DataFrame,
-    out_dim: int,
-    seed: int,
-    vec_col: str,
-    d: int,
-    inv: float,
-) -> DataFrame:
-    """Arrow twin of the literal hash projection: the d x out_dim sign
-    matrix is rebuilt per task from the same md5 parity formula (never
-    shipped as data), and out[j] = (sum_i v[i]*sign(i,j)) * inv with the
-    sum accumulated in index order (np.cumsum == the JVM fold), so every
-    value is bit-equal to the literal plan's."""
-    import hashlib
 
     import numpy as np
 
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    def fn(batches):
+    from ..functions import spread_input
+
+    inv = 1.0 / math.sqrt(float(out_dim))
+
+    def sign_matrix(d: int):
         smat = np.empty((d, out_dim), dtype=np.float64)
         for i in range(d):
             for j in range(out_dim):
                 h = hashlib.md5(f"proj|{seed}|{i}|{j}".encode()).hexdigest()
                 smat[i, j] = 1.0 if int(h[0], 16) % 2 == 0 else -1.0
+        return smat
+
+    def fn(batches):
+        smats = {}
         for pdf in batches:
             if not len(pdf):
                 continue
             v = np.array([list(x) for x in pdf[vec_col]], dtype=np.float64)
+            d = v.shape[1]
+            if d not in smats:
+                smats[d] = sign_matrix(d)
+            smat = smats[d]
             proj = np.empty((len(pdf), out_dim), dtype=np.float64)
             for j in range(out_dim):
                 proj[:, j] = np.cumsum(v * smat[:, j], axis=1)[:, -1] * inv
@@ -470,8 +366,6 @@ def _hash_project_arrow(
         list(embeddings.schema.fields)
         + [StructField("projected", ArrayType(DoubleType()), True)]
     )
-    from ..functions import spread_input
-
     src = spread_input(
         embeddings, "vec_id" if "vec_id" in embeddings.columns else None
     )
@@ -528,41 +422,15 @@ def topk_int8_rerank(
     return exact.orderBy(F.desc("cos_sim"), F.asc("vec_id")).limit(k)
 
 
-def _nearest_centroid_col(centroids: list[list[float]], vec_col: str = "embedding"):
-    """argmin squared-distance over centroid literals, JVM-side: build an
-    array of (dist, cell) structs and take array_min (struct ordering
-    compares dist first, then cell — deterministic ties)."""
-    v = F.col(vec_col).cast("array<double>")
-    cells = []
-    for ci, c in enumerate(centroids):
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        d = F.aggregate(
-            F.zip_with(v, lit, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        )
-        cells.append(F.struct(d.alias("dist"), F.lit(ci).alias("cell")))
-    return F.array_min(F.array(*cells))["cell"]
-
-
-# k*d at or above which cell assignment switches from plan literals to the
-# Arrow-batched scorer (VERDICT r7 item 2): a real 100 TB IVF wants k in
-# the tens of thousands of cells, where k*d plan literals stall Catalyst;
-# the Arrow scorer carries the centroid matrix as task-local numpy state
-# with BIT-EQUAL arithmetic (parity-tested), so the cutover is free to sit
-# low — the batched scorer also measures ~3x faster than the interpreted
-# higher-order fold already at k=8, d=64.
-ARROW_ASSIGN_MIN_KD = 256
-
-
 def _assign_arrow(
     embeddings: DataFrame, centroids: list[list[float]], vec_col: str
 ) -> DataFrame:
-    """Arrow-batched nearest-centroid assignment, bit-equal to
-    _nearest_centroid_col: per-centroid squared distances accumulate in
-    index order (np.cumsum running sum == the JVM fold's left-to-right
-    adds), float32 -> float64 widening is exact, and np.argmin takes the
-    FIRST minimum — the same (dist, cell) struct-ordering tie-break."""
+    """Arrow-batched nearest-centroid assignment. The centroid matrix is
+    task-local numpy state, so the plan carries no k*d literals whatever
+    the cell count. Per-centroid squared distances accumulate in index
+    order (np.cumsum running sum == the SQL oracle's left-to-right fold),
+    float32 -> float64 widening is exact, and np.argmin takes the FIRST
+    minimum, so ties go to the lowest cell id."""
     import numpy as np
     import pandas as pd  # noqa: F401  (mapInPandas batches are pandas)
 
@@ -597,21 +465,11 @@ def _assign_arrow(
 
 
 def ivf_assign(
-    embeddings: DataFrame,
-    centroids: list[list[float]],
-    method: str = "auto",
+    embeddings: DataFrame, centroids: list[list[float]]
 ) -> DataFrame:
-    """Add the IVF cell id; at scale the index table is written
-    partitioned/clustered by cell so probes prune partitions.
-
-    method: "literal" pins the k*d-literal JVM argmin, "arrow" the
-    batched numpy scorer, "auto" (default) picks by k*d against
-    ARROW_ASSIGN_MIN_KD. Both paths are bit-equal (tested), so the
-    choice never changes results — only plan size and speed."""
-    k = len(centroids)
-    d = len(centroids[0]) if k else 0
-    if method == "literal" or (method == "auto" and k * d < ARROW_ASSIGN_MIN_KD):
-        return embeddings.withColumn("cell", _nearest_centroid_col(centroids))
+    """Add the IVF cell id (nearest centroid, Arrow-batched); at scale
+    the index table is written partitioned/clustered by cell so probes
+    prune partitions."""
     return _assign_arrow(embeddings, centroids, "embedding")
 
 
@@ -639,43 +497,6 @@ def ivf_topk(
     )
 
 
-def _cell_neardup_drops(assigned: DataFrame, threshold: float) -> DataFrame:
-    """Within-cell near-dup victims as one Arrow stage per IVF cell: a
-    vec_id is emitted iff some same-cell vector with a smaller id scores
-    rounded-cosine >= threshold against it. The JVM higher-order fold
-    scores ~10x slower per pair (expression interpreter, no codegen);
-    numpy does the same arithmetic BIT-IDENTICALLY: dot products and
-    norms accumulate in index order (np.cumsum running sum = the fold's
-    left-to-right order), float32 -> float64 widening is exact, and the
-    4-decimal rounding replicates the JVM/SQL HALF_UP."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        m = len(ids)
-        if m < 2:
-            return pd.DataFrame({"vec_id": np.array([], dtype="int64")})
-        v = np.array([list(x) for x in pdf["embedding"]], dtype="float64")
-        norms = np.sqrt(np.cumsum(v * v, axis=1)[:, -1])
-        dropped = np.zeros(m, dtype=bool)
-        for i in range(m - 1):
-            rest = v[i + 1 :]
-            dots = np.cumsum(rest * v[i], axis=1)[:, -1]
-            den = norms[i] * norms[i + 1 :]
-            nz = den != 0
-            cos = np.zeros(len(rest))
-            cos[nz] = dots[nz] / den[nz]
-            rounded = np.sign(cos) * np.floor(
-                np.abs(cos) * 10000.0 + 0.5
-            ) / 10000.0
-            dropped[i + 1 :] |= nz & (rounded >= threshold)
-        return pd.DataFrame({"vec_id": ids[dropped].astype("int64")})
-
-    return assigned.groupBy("cell").applyInPandas(fn, "vec_id long")
-
-
 def semantic_dedup(
     embeddings: DataFrame,
     centroids: list[list[float]],
@@ -684,7 +505,7 @@ def semantic_dedup(
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): embeddings are clustered by the IVF coarse
     quantizer, and near-duplicates are detected only WITHIN a cell —
-    pair generation is a cell-equality self-join, never a cross join, so
+    pair generation is blocked on cell equality, never a cross join, so
     the 100 TB cost is sum(|cell|^2) over balanced cells instead of N^2
     (the paper's within-cluster pruning, on the same quantizer the ANN
     index already maintains).
@@ -693,19 +514,19 @@ def semantic_dedup(
     vector with a smaller vec_id is cosine-similar at >= threshold —
     lowest-id-representative preference, evaluated against all smaller
     ids (not only kept ones), so chains a~b, b~c drop both b and c even
-    when a!~c. One relational pass, no iteration, engine-portable.
+    when a!~c. One pass, no iteration, engine-portable.
 
     Returns the kept rows as (vec_id, cell). The within-cell scoring is
-    an Arrow stage (_cell_neardup_drops) doing the fold-identical numpy
-    arithmetic — the relational pair join (cosine_neardup_pairs with
-    block_col="cell") remains available and produces the identical drop
-    set (test-asserted), but scores ~10x slower through the expression
-    interpreter.
+    cosine_neardup_pairs_arrow blocked on the cell; every pair's larger
+    id (vec_b) is a drop, applied with a left anti-join (a drop listed
+    twice removes its row once, so no distinct is needed).
     """
     assigned = ivf_assign(
         embeddings.select("vec_id", "embedding"), centroids
     )
-    drops = _cell_neardup_drops(assigned, threshold)
+    drops = cosine_neardup_pairs_arrow(
+        assigned, threshold, block_col="cell"
+    ).select(F.col("vec_b").alias("vec_id"))
     return assigned.join(drops, "vec_id", "left_anti").select(
         "vec_id", "cell"
     )

@@ -131,21 +131,6 @@ def shingles_of_tokens_n2(wcol):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _with_tri(df: DataFrame) -> DataFrame:
-    """Char-trigram column over the normalized text `t`, as a VECTORIZED
-    Arrow batch (python slicing is O(1) per window). The previous all-JVM
-    form — transform(sequence(...), i -> substring(t, i, 3)) — was
-    measured ~10x slower: substring on UTF8String walks from the string
-    start (multi-byte aware), so the per-position HOF is O(len^2) PER
-    DOCUMENT no matter how the input is materialized. Trigram content is
-    identical (both slice by characters)."""
-    @F.pandas_udf("array<string>")
-    def tri(t: pd.Series) -> pd.Series:
-        return t.map(lambda s: [s[i : i + 3] for i in range(len(s) - 2)])
-
-    return df.withColumn("tri", tri("t"))
-
-
 def _norm_docs(documents: DataFrame) -> DataFrame:
     """(doc_id, lang, t): whitespace-collapsed lowercase text, >= 3 chars.
     spread_input: every consumer is a CPU-heavy trigram stage, and a
@@ -159,10 +144,9 @@ def _norm_docs(documents: DataFrame) -> DataFrame:
 def _tri_counts(norm: DataFrame) -> DataFrame:
     """Partially-aggregated per-(lang, trigram) occurrence counts as ONE
     Arrow stage: each batch emits its local Counter as (lang, g, c) rows.
-    Replaces the _with_tri array + JVM explode on the PROFILE side of the
-    lang-ID / fluency trainers — shipping every trigram occurrence back
-    through Arrow (~300 strings per document) cost more than the whole
-    downstream aggregation; the per-batch Counter ships only the batch's
+    Shipping every trigram occurrence back through Arrow (~300 strings
+    per document) for a JVM explode cost more than the whole downstream
+    aggregation; the per-batch Counter ships only the batch's
     distinct (lang, trigram) vocabulary, which the JVM then sums. Counts
     are exact integers, so the summed profile is identical to the
     explode+count form regardless of batch boundaries."""
@@ -190,34 +174,6 @@ def _tri_counts(norm: DataFrame) -> DataFrame:
     )
 
 
-def _lang_classify(grams: DataFrame, profile: DataFrame, top_k: int) -> DataFrame:
-    """Classification against a given profile table: ZERO profile
-    aggregation in this plan (tests/test_plan_shapes.py pins it) — the
-    doc side's array_distinct is shuffle-free and the profile join is an
-    explicit broadcast."""
-    doc_grams = grams.select(
-        "doc_id", "lang", F.explode(F.array_distinct("tri")).alias("g")
-    )
-    scored = (
-        doc_grams.join(F.broadcast(profile), "g")
-        .groupBy("doc_id", "lang", "p_lang")
-        .agg(
-            F.sum(F.lit(top_k + 1) - F.col("rank")).cast("bigint").alias("score")
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("p_lang"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            F.col("lang").alias("actual_lang"),
-            F.col("p_lang").alias("predicted_lang"),
-            "score",
-        )
-    )
-
-
 def lang_profile_table(documents: DataFrame, top_k: int = 50) -> DataFrame:
     """TRAIN once: the persistable language-trigram profile (p_lang, g,
     rank). The 100-TB shape is write-this-table-then-classify; the fused
@@ -242,22 +198,11 @@ def lang_profile_table(documents: DataFrame, top_k: int = 50) -> DataFrame:
     )
 
 
-def lang_id_classify(
-    documents: DataFrame, profile: DataFrame, top_k: int = 50
-) -> DataFrame:
-    """APPLY only: classify documents against a pretrained profile table —
-    no profile aggregation anywhere in this plan."""
-    return _lang_classify(
-        _with_tri(_norm_docs(documents)), profile, top_k
-    )
-
-
 def lang_id_ngram(documents: DataFrame, top_k: int = 50) -> DataFrame:
-    """Language identification by character-trigram profiles, model-free
-    and relational except the vectorized Arrow trigram stage: train
-    (top_k trigrams per language by count desc, trigram asc) fused with
-    classify (distinct doc trigrams join the broadcast profile; score =
-    sum(top_k + 1 - rank); argmax with lang-asc tie-break).
+    """Language identification by character-trigram profiles, model-free:
+    train (top_k trigrams per language by count desc, trigram asc), then
+    classify (each distinct doc trigram found in the profile adds
+    top_k + 1 - rank; argmax with lang-asc tie-break).
 
     On real multilingual text this is the classic n-gram LID heuristic; on
     the synthetic corpus (shared vocabulary across langs) it demonstrates
@@ -266,12 +211,9 @@ def lang_id_ngram(documents: DataFrame, top_k: int = 50) -> DataFrame:
     Execution (round 8): the trained profile is collected — top_k rows per
     language, the same bounded model-state collect the BM25/IVF trainers
     make — and the apply side runs the dictionary-pattern stateless UDF
-    (lang_id_classify_stream), which is row-equal to the relational
-    lang_id_classify by test (integer scores, identical tie-breaks,
-    identical no-hit exclusion). That removes the classify side's second
-    trigram pass + explode + profile join + score aggregation + argmax
-    window from the plan; the relational classify remains the tested
-    reference (test_split_forms_equal_fused compares the two end to end).
+    (lang_id_classify_stream): no second trigram pass, explode, profile
+    join, score aggregation or argmax window in the plan. The DuckDB
+    oracle (q_lang_id) checks the result end to end.
 
     No session-lifetime cache: the profile pass runs once (its rows are
     the model state); NOTE (round 2): deriving both sides from a shared
@@ -296,11 +238,9 @@ def fluency_scores(documents: DataFrame, top_k: int = 200) -> DataFrame:
     Execution mirrors lang_id_ngram (round 8): the trained profile —
     top_k trigrams per language, bounded model state — is collected and
     the apply side runs the stateless dictionary UDF
-    (fluency_classify_stream), bit-equal to the relational
-    fluency_classify by test (exact integer numerators/denominators
-    computed in Python, the fraction + HALF_UP rounding stay JVM-side).
-    The relational classify remains the tested reference
-    (test_split_forms_equal_fused).
+    (fluency_classify_stream): exact integer numerators/denominators
+    computed in Python, the fraction + HALF_UP rounding JVM-side. The
+    DuckDB oracle (q_fluency) checks the result end to end.
 
     Output: (doc_id, lang, n_trigrams bigint, in_profile_frac).
     """
@@ -332,62 +272,20 @@ def fluency_profile_table(documents: DataFrame, top_k: int = 200) -> DataFrame:
     )
 
 
-def fluency_classify(documents: DataFrame, profile: DataFrame) -> DataFrame:
-    """APPLY only: coverage of each doc's trigram occurrences by a
-    pretrained profile — zero profile aggregation, zero window functions
-    in this plan (tests/test_plan_shapes.py pins it)."""
-    return _fluency_classify(
-        documents, _with_tri(_norm_docs(documents)), profile
-    )
-
-
-def _fluency_classify(
-    documents: DataFrame, grams: DataFrame, profile: DataFrame
-) -> DataFrame:
-    occ = (
-        grams.select("doc_id", "lang", F.explode("tri").alias("g"))
-        .groupBy("doc_id", "lang", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    j = occ.join(
-        F.broadcast(profile),
-        (occ.lang == profile.lang) & (occ.g == profile.pg),
-        "left_outer",
-    ).select(occ.doc_id, occ.lang, occ.c, profile.pg)
-    stats = j.groupBy("doc_id", "lang").agg(
-        F.sum("c").cast("bigint").alias("n_trigrams"),
-        F.round(
-            F.sum(F.when(F.col("pg").isNotNull(), F.col("c")).otherwise(0))
-            / F.sum("c"),
-            6,
-        ).alias("in_profile_frac"),
-    )
-    # short/empty docs (< 3 normalized chars) carry zero trigrams
-    return (
-        documents.select("doc_id", "lang")
-        .join(stats, ["doc_id", "lang"], "left")
-        .select(
-            "doc_id",
-            "lang",
-            F.coalesce("n_trigrams", F.lit(0)).cast("bigint").alias("n_trigrams"),
-            F.coalesce("in_profile_frac", F.lit(0.0)).alias("in_profile_frac"),
-        )
-    )
-
-
 def lang_id_classify_stream(
     documents: DataFrame, profile_rows: list, top_k: int = 50
 ) -> DataFrame:
-    """Streaming APPLY for the pretrained language-ID model. The
-    relational classify's argmax window cannot run on an unbounded
-    stream, so the profile — tiny persisted model state, (p_lang, g,
-    rank) rows — is pinned per executor inside a STATELESS scalar pandas
-    UDF (the dictionary pattern) and each document scores locally.
-    Scoring is the same exact-integer sum as _lang_classify, the
-    normalization mirrors the JVM expression (ASCII \\s collapse +
-    lower), and docs with no profile hits are excluded the same way the
-    inner join excludes them — proven row-equal to lang_id_classify in
-    tests, on batch AND under availableNow streaming."""
+    """APPLY for the pretrained language-ID model, batch or streaming. An
+    argmax window cannot run on an unbounded stream, so the profile —
+    tiny persisted model state, (p_lang, g, rank) rows — is pinned per
+    executor inside a STATELESS scalar pandas UDF (the dictionary
+    pattern) and each document scores locally: score = sum over the
+    doc's DISTINCT trigrams of (top_k + 1 - rank), exact integers,
+    argmax with p_lang-asc tie-break. The normalization mirrors the JVM
+    expression (ASCII \\s collapse + lower), and docs with no profile
+    hit are dropped. The plan has no aggregate, window or exchange
+    (tests/test_plan_shapes.py pins it); batch and availableNow
+    streaming agree row for row (tests/test_streaming.py)."""
     import re as _re
 
     by_gram: dict = {}
@@ -441,12 +339,13 @@ def lang_id_classify_stream(
 def fluency_classify_stream(
     documents: DataFrame, profile_rows: list
 ) -> DataFrame:
-    """Streaming APPLY for the pretrained fluency profile: the (lang, pg)
-    set pins per executor in a stateless scalar UDF that emits the EXACT
-    INTEGER components (n_trigrams, covered); the fraction + HALF_UP
-    rounding stay JVM-side as the identical expression the batch path
-    evaluates, so results are bit-equal to fluency_classify (tested on
-    batch and under availableNow)."""
+    """APPLY for the pretrained fluency profile, batch or streaming: the
+    (lang, pg) set pins per executor in a stateless scalar UDF that
+    emits the EXACT INTEGER components (n_trigrams, covered); the
+    fraction + HALF_UP rounding stay JVM-side. The plan has no
+    aggregate, window or exchange (tests/test_plan_shapes.py pins it);
+    batch and availableNow streaming agree row for row
+    (tests/test_streaming.py)."""
     import re as _re
 
     pset = frozenset((r["lang"], r["pg"]) for r in profile_rows)
@@ -480,8 +379,8 @@ def fluency_classify_stream(
         "doc_id",
         "lang",
         F.col("d.n").alias("n_trigrams"),
-        # ANSI-safe zero-trigram guard: 0/0 must yield the batch path's
-        # 0.0 (left-join coalesce), not a DIVIDE_BY_ZERO error
+        # ANSI-safe zero-trigram guard: 0/0 must yield 0.0 (the oracle's
+        # left-join coalesce), not a DIVIDE_BY_ZERO error
         F.when(
             F.col("d.n") > 0, F.round(F.col("d.cov") / F.col("d.n"), 6)
         ).otherwise(F.lit(0.0)).alias("in_profile_frac"),

@@ -123,8 +123,8 @@ def pack_sequences(
     order), aggregate token sums per bucket (<= 4096 rows TOTAL), take
     the exclusive bucket prefix over that bounded aggregate, then run
     each bucket's exact per-item window over ~1/4096 of the corpus with
-    the bucket prefix as its base offset. Row-identical to the single
-    global window (test-asserted).
+    the bucket prefix as its base offset. Row-identical to one global
+    running-offset window (the DuckDB oracle's shape, test-asserted).
     """
     pr = F.md5(F.col(key_col).cast("string"))
     base = (
@@ -153,23 +153,6 @@ def pack_sequences(
         F.sum(token_col).over(win), F.lit(0)
     )
     with_off = base.join(prefix, "_pk_bucket").withColumn("_pk_off", off)
-    return _explode_spans(with_off, key_col, token_col, seq_len)
-
-
-def pack_sequences_window(
-    df: DataFrame,
-    key_col: str,
-    token_col: str,
-    seq_len: int = 512,
-) -> DataFrame:
-    """Single-global-window reference form of pack_sequences (the oracle
-    shape); used by the equivalence test and the SQL oracle."""
-    w = Window.orderBy(
-        F.md5(F.col(key_col).cast("string")), key_col
-    ).rowsBetween(Window.unboundedPreceding, -1)
-    with_off = df.filter(F.col(token_col) > 0).withColumn(
-        "_pk_off", F.coalesce(F.sum(token_col).over(w), F.lit(0))
-    )
     return _explode_spans(with_off, key_col, token_col, seq_len)
 
 

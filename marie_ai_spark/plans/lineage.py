@@ -44,27 +44,33 @@ def bucket_col(n_buckets: int):
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
+    """The lineage table at `path`, or an empty one before the first
+    append."""
     if os.path.isdir(path) and any(
         f.endswith(".parquet") for f in os.listdir(path)
-    ) or os.path.isdir(os.path.join(path, "_delta_log")):
+    ):
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    if os.path.isdir(path):
-        try:
-            return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-        except Exception:
-            pass
     return spark.createDataFrame([], LINEAGE_SCHEMA)
 
 
-def done_partitions(spark: SparkSession, path: str, run_id: str) -> set[int]:
-    lin = read_lineage(spark, path)
+def done_partitions(
+    spark: SparkSession, path: str, run_id: str
+) -> tuple[set[int], dict[int, int]]:
+    """One lineage read for a run: the buckets with a `done` row, and the
+    highest attempt recorded per bucket (done or failed) — the resume set
+    and the retry counter come from the same collect."""
     rows = (
-        lin.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("partition_id")
-        .distinct()
+        read_lineage(spark, path)
+        .filter(F.col("run_id") == run_id)
+        .groupBy("partition_id")
+        .agg(
+            F.bool_or(F.col("status") == "done").alias("done"),
+            F.max("attempt").alias("max_attempt"),
+        )
         .collect()
     )
-    return {r.partition_id for r in rows}
+    done = {r.partition_id for r in rows if r.done}
+    return done, {r.partition_id: r.max_attempt for r in rows}
 
 
 def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:

@@ -70,26 +70,15 @@ def run_extract(
     lineage_path = f"{out_dir}/lineage"
 
     transcripts = io.read(input_path)
-    done = done_partitions(spark, lineage_path, run_id)
+    # attempt = 1 + the highest prior (failed) attempt for a bucket, the
+    # analog of the scheduler's retry_count (marie/scheduler/fixtures.py:48)
+    done, prior_attempts = done_partitions(spark, lineage_path, run_id)
     universe = sorted(set(buckets)) if buckets is not None else range(n_buckets)
     todo = [b for b in universe if b not in done]
     if max_buckets is not None:
         todo = todo[:max_buckets]
     if not todo:
         return {"run_id": run_id, "processed": 0, "skipped": len(done), "rows_out": 0}
-
-    # attempt = 1 + number of prior (failed) attempts for this run's buckets,
-    # the analog of the scheduler's retry_count (marie/scheduler/fixtures.py:48)
-    from .lineage import read_lineage
-
-    prior = (
-        read_lineage(spark, lineage_path)
-        .filter(F.col("run_id") == run_id)
-        .groupBy("partition_id")
-        .agg(F.max("attempt").alias("max_attempt"))
-        .collect()
-    )
-    prior_attempts = {r["partition_id"]: r["max_attempt"] for r in prior}
 
     started = datetime.now(timezone.utc).replace(tzinfo=None)
     pending = transcripts.withColumn("_bucket", bucket_col(n_buckets)).filter(

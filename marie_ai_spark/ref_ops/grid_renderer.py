@@ -67,7 +67,3 @@ def render_grid_page(lines: list[dict], width: int) -> str:
             buffer.append("\n")
     return "".join(buffer)
 
-
-def render_grid_pages(pages: list[tuple[list[dict], int]]) -> str:
-    """Multi-page render: pages = [(lines, width), ...] joined with \\f."""
-    return "\f".join(render_grid_page(lines, width) for lines, width in pages)

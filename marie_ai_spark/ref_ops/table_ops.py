@@ -217,10 +217,3 @@ def alphanumeric_value(v: str) -> str:
     s = re.sub(r"\s*,\s*", ",", v)
     return re.sub(r"[^a-zA-Z0-9,]", "", s)
 
-
-def transform_value(v: str, field_type: str) -> str:
-    if field_type == "MONEY":
-        return money_value(v)
-    if field_type == "ALPHA_NUMERIC":
-        return alphanumeric_value(v)
-    return (v or "").strip()  # ALPHA default (transform.py:160)

@@ -3,6 +3,8 @@
 Defaults chosen for the 100 TB design point and scaled down by config:
   - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
   - Arrow-batched Python UDF transport, bounded batch size (UDF memory)
+  - the default master is local[$SPARK_GRAFT_CPUS], or one task thread
+    per core the host reports when that is unset
   - shuffle partitions sized to the local core count in tests; on a real
     cluster this is overridden per job (2-3x total cores)
 """
@@ -20,7 +22,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"

@@ -5,6 +5,6 @@ from marie_ai_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("marie-ai-spark-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("marie-ai-spark-tests")
     yield s
     s.stop()

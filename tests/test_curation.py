@@ -135,15 +135,38 @@ def test_per_source_cap_two_phase_equals_single_window(spark):
         assert counts[s] == min(9, sum(1 for v in src.values() if v == s))
 
 
+def _single_window_kept(rows, budgets, default_budget=0):
+    """Reference for token_budget_sample: the doc_ids one
+    source-partitioned running-sum window keeps, in DuckDB SQL over the
+    same (doc_id, source, n_tok) rows."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register(
+        "items", pd.DataFrame(rows, columns=["doc_id", "source", "n_tok"])
+    )
+    budget = "CASE source {} ELSE {} END".format(
+        " ".join(f"WHEN '{s}' THEN {b}" for s, b in budgets.items()),
+        int(default_budget),
+    )
+    return {r[0] for r in con.sql(f"""
+        SELECT doc_id FROM (
+            SELECT doc_id, source, sum(n_tok) OVER (
+                PARTITION BY source ORDER BY md5(doc_id::VARCHAR), doc_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+            ) AS cum
+            FROM items
+        ) WHERE cum <= {budget}
+    """).fetchall()}
+
+
 def test_token_budget_sample_two_phase_equals_single_window(spark):
     """The bucketed two-phase prefix-sum plan must keep exactly the rows
     of the single source-window running sum, including on a skewed input
     (one domain = half the corpus) and a source whose total mass is
-    under budget (kept whole)."""
-    from marie_ai_spark.operators.curation import (
-        token_budget_sample,
-        token_budget_sample_window,
-    )
+    under budget (kept whole). The single window runs in DuckDB."""
+    from marie_ai_spark.operators.curation import token_budget_sample
 
     rows = [
         (i, "hot" if i < 500 else f"s{i % 7}", 10 + i % 37)
@@ -157,12 +180,7 @@ def test_token_budget_sample_two_phase_equals_single_window(spark):
             df, "source", budgets, "doc_id", "n_tok", default_budget=10_000
         ).collect()
     }
-    want = {
-        r.doc_id
-        for r in token_budget_sample_window(
-            df, "source", budgets, "doc_id", "n_tok", default_budget=10_000
-        ).collect()
-    }
+    want = _single_window_kept(rows, budgets, default_budget=10_000)
     assert got == want and got
     # budget semantics: per-source kept mass <= budget, and the next doc
     # in priority order would overflow (the sample is maximal)
@@ -191,13 +209,11 @@ def test_token_budget_zero_token_row_at_exact_budget_boundary(spark):
     exclusive prefix equals the budget exactly must be kept (the single
     window keeps it: cum == budget). The two-phase plan previously
     classified that bucket wholly-past (prefix < budget gate) and dropped
-    the row. Bucket layout is engineered from the real md5 priorities."""
+    the row. Bucket layout is engineered from the real md5 priorities;
+    the single window runs in DuckDB."""
     import hashlib
 
-    from marie_ai_spark.operators.curation import (
-        token_budget_sample,
-        token_budget_sample_window,
-    )
+    from marie_ai_spark.operators.curation import token_budget_sample
 
     ids = list(range(200))
     pr = {i: hashlib.md5(str(i).encode()).hexdigest() for i in ids}
@@ -220,12 +236,7 @@ def test_token_budget_zero_token_row_at_exact_budget_boundary(spark):
             df, "source", {"s": budget}, "doc_id", "n_tok"
         ).collect()
     }
-    want = {
-        r.doc_id
-        for r in token_budget_sample_window(
-            df, "source", {"s": budget}, "doc_id", "n_tok"
-        ).collect()
-    }
+    want = _single_window_kept(rows, {"s": budget})
     assert lead in want  # the window form keeps the cum==budget row
     assert got == want
 

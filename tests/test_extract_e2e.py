@@ -54,6 +54,35 @@ def engine_out(spark, local_df):
     return out.reset_index(drop=True)
 
 
+def test_ordered_extracted_builds_lazily_and_extracts_once(spark, local_df):
+    """Building the ordered plan submits no Spark job (its checkpoint is
+    lazy), and materializing it runs the extraction subtree once per
+    input row, although the range exchange samples its input in a
+    separate job first. Rows are counted by an accumulator in a
+    pass-through stage under the extraction UDF."""
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def count(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    sdf = spark.createDataFrame(local_df)
+    counted = sdf.mapInPandas(count, sdf.schema)
+    group = "ordered-extracted-build"
+    sc.setJobGroup(group, "build the ordered extraction plan")
+    try:
+        out = ordered_extracted(extract_transcripts(counted))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert seen.value == 0
+    rows = out.collect()
+    assert len(rows) == len(local_df)
+    assert seen.value == len(local_df)
+
+
 def test_spark_generator_matches_local(spark, local_df):
     sdf = gen_spark(spark, N_CONVS, seed=42).toPandas()
     sdf = sdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)

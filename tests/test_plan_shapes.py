@@ -148,56 +148,116 @@ def test_section_tables_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _no_aggregate_window_exchange(plan: str) -> None:
+    for op in ("HashAggregate", "ObjectHashAggregate", "SortAggregate",
+               "Window", "Exchange"):
+        assert _count(plan, op) == 0, (op, plan[:800])
+
+
 def test_lang_id_classify_has_no_profile_aggregation(spark):
     """The train/apply split's 100-TB claim: classifying against a
-    PRETRAINED profile performs zero profile aggregation — the only
-    aggregate pair (partial+final) is the per-doc score groupBy, the only
-    window is the per-doc argmax, and the profile join is a broadcast."""
-    from marie_ai_spark.operators.textstats import lang_id_classify
+    PRETRAINED profile (lang_id_classify_stream, the apply every lang-ID
+    query runs) is one stateless Arrow stage — no aggregate, no window,
+    no exchange, so the same plan serves a stream."""
+    from marie_ai_spark.operators.textstats import lang_id_classify_stream
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    profile = spark.createDataFrame(
-        [("en", "the", 1), ("de", "der", 1)], "p_lang string, g string, rank int"
-    )
-    plan = _plan(lang_id_classify(docs, profile, top_k=50))
-    assert _count(plan, "HashAggregate") + _count(plan, "ObjectHashAggregate") \
-        + _count(plan, "SortAggregate") <= 2, plan[:800]
-    assert _count(plan, "Window") == 1, plan[:800]
-    assert _count(plan, "BroadcastHashJoin") >= 1, plan[:800]
+    profile = [{"p_lang": "en", "g": "the", "rank": 1},
+               {"p_lang": "de", "g": "der", "rank": 1}]
+    plan = _plan(lang_id_classify_stream(docs, profile, top_k=50))
+    _no_aggregate_window_exchange(plan)
+    assert _count(plan, "ArrowEvalPython") >= 1, plan[:800]
 
 
 def test_fluency_classify_has_no_profile_aggregation(spark):
-    """fluency_classify against a pretrained profile: only the doc-side
-    occurrence count + per-doc rollup aggregates (2 pairs), ZERO window
-    functions (the profile ranking window lives in train only)."""
-    from marie_ai_spark.operators.textstats import fluency_classify
+    """fluency_classify_stream against a pretrained profile: no
+    aggregate, no window (the profile ranking window lives in train
+    only), no exchange."""
+    from marie_ai_spark.operators.textstats import fluency_classify_stream
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    profile = spark.createDataFrame(
-        [("en", "the"), ("de", "der")], "lang string, pg string"
-    )
-    plan = _plan(fluency_classify(docs, profile))
-    assert _count(plan, "HashAggregate") + _count(plan, "ObjectHashAggregate") \
-        + _count(plan, "SortAggregate") <= 4, plan[:800]
-    assert _count(plan, "Window") == 0, plan[:800]
-    assert _count(plan, "BroadcastHashJoin") >= 1, plan[:800]
+    profile = [{"lang": "en", "pg": "the"}, {"lang": "de", "pg": "der"}]
+    plan = _plan(fluency_classify_stream(docs, profile))
+    _no_aggregate_window_exchange(plan)
+    assert _count(plan, "ArrowEvalPython") >= 1, plan[:800]
+
+
+def _trigram_fold(docs, lid_top_k: int, flu_top_k: int):
+    """Plain-Python train + apply of both trigram models over collected
+    (doc_id, lang, text) rows: profiles rank trigrams by (count desc,
+    trigram asc); lang-ID sums top_k + 1 - rank over a doc's DISTINCT
+    trigrams (argmax, p_lang asc on ties; no hit -> no row); fluency is
+    the HALF_UP-rounded share of trigram occurrences in the doc's own
+    language profile (0.0 for docs under 3 chars)."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def norm(t):
+        return re.sub(r"\s+", " ", t or "", flags=re.ASCII).lower()
+
+    def grams(t):
+        return [t[i:i + 3] for i in range(len(t) - 2)]
+
+    counts: dict = {}
+    for _d, lang, text in docs:
+        counts.setdefault(lang, Counter()).update(grams(norm(text)))
+
+    def top(lang, k):
+        return sorted(counts[lang].items(), key=lambda gc: (-gc[1], gc[0]))[:k]
+
+    lid_prof: dict = {}
+    for lang in counts:
+        for rank, (g, _c) in enumerate(top(lang, lid_top_k), start=1):
+            lid_prof.setdefault(g, []).append((lang, lid_top_k + 1 - rank))
+    flu_prof = {(lang, g) for lang in counts
+                for g, _c in top(lang, flu_top_k)}
+
+    lid, flu = set(), set()
+    for doc_id, lang, text in docs:
+        t = norm(text)
+        acc: dict = {}
+        for g in set(grams(t)):
+            for p_lang, w in lid_prof.get(g, ()):
+                acc[p_lang] = acc.get(p_lang, 0) + w
+        if acc:
+            p_lang, score = min(acc.items(), key=lambda kv: (-kv[1], kv[0]))
+            lid.add((doc_id, lang, p_lang, score))
+        occ = grams(t)
+        cov = sum(1 for g in occ if (lang, g) in flu_prof)
+        frac = (
+            float((Decimal(cov) / Decimal(len(occ))).quantize(
+                Decimal("0.000001"), rounding=ROUND_HALF_UP))
+            if occ else 0.0
+        )
+        flu.add((doc_id, lang, len(occ), frac))
+    return lid, flu
 
 
 def test_split_forms_equal_fused(spark):
-    """Train+apply == fused, row for row (both paths share the oracle)."""
+    """Train+apply (a collected profile table fed to the stateless
+    apply) == the fused query functions == a plain-Python fold of both
+    models, row for row."""
     from marie_ai_spark.operators import textstats
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    fused = textstats.lang_id_ngram(docs, top_k=20).collect()
-    split = textstats.lang_id_classify(
-        docs, textstats.lang_profile_table(docs, top_k=20), top_k=20
-    ).collect()
-    assert sorted(map(tuple, fused)) == sorted(map(tuple, split))
-    f2 = textstats.fluency_scores(docs, top_k=50).collect()
-    s2 = textstats.fluency_classify(
-        docs, textstats.fluency_profile_table(docs, top_k=50)
-    ).collect()
-    assert sorted(map(tuple, f2)) == sorted(map(tuple, s2))
+    want_lid, want_flu = _trigram_fold(
+        [tuple(r) for r in docs.select("doc_id", "lang", "text").collect()],
+        lid_top_k=20, flu_top_k=50,
+    )
+    fused = {tuple(r) for r in textstats.lang_id_ngram(docs, top_k=20).collect()}
+    split = {tuple(r) for r in textstats.lang_id_classify_stream(
+        docs,
+        [r.asDict() for r in textstats.lang_profile_table(docs, 20).collect()],
+        top_k=20,
+    ).collect()}
+    assert fused == split == want_lid and fused
+    f2 = {tuple(r) for r in textstats.fluency_scores(docs, top_k=50).collect()}
+    s2 = {tuple(r) for r in textstats.fluency_classify_stream(
+        docs,
+        [r.asDict()
+         for r in textstats.fluency_profile_table(docs, 50).collect()],
+    ).collect()}
+    assert f2 == s2 == want_flu and f2
 
 
 def test_faithfulness_is_join_only(spark, tr):
@@ -302,7 +362,7 @@ def test_duplicate_spans_no_cartesian(spark):
 
 
 def test_semantic_dedup_is_cell_partitioned(spark):
-    """semantic_dedup: pair generation is an equi-join on the IVF cell —
+    """semantic_dedup: pair generation is grouped by the IVF cell —
     never a cartesian/nested-loop product — so the work is partitioned by
     cell (sum of |cell|^2, not N^2) at any scale."""
     from marie_ai_spark.operators.similarity import (

@@ -353,33 +353,38 @@ def test_streaming_curation_funnel_matches_batch(spark, tmp_path):
 def test_streaming_pretrained_classify_matches_batch(spark, tmp_path):
     """The train/apply story under streaming: both pretrained classifiers
     (language-ID argmax, fluency coverage) run their APPLY stage on an
-    unbounded stream via the dictionary-pattern stateless UDFs, and the
-    availableNow drain must equal the relational batch classify row for
-    row — including the integer scores and the HALF_UP-rounded
-    fraction."""
+    unbounded stream via the dictionary-pattern stateless UDFs. The batch
+    apply must equal the DuckDB oracle of the fused train+apply query
+    over the same documents (same top_k), and the availableNow drain
+    must equal the batch apply row for row — including the integer
+    scores and the HALF_UP-rounded fraction."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
     from marie_ai_spark.operators.textstats import (
-        fluency_classify,
         fluency_classify_stream,
         fluency_profile_table,
-        lang_id_classify,
         lang_id_classify_stream,
         lang_profile_table,
     )
 
     docs_path = "/root/testdata/sf0.001/documents.parquet"
     docs = spark.read.parquet(docs_path)
-    lang_prof = lang_profile_table(docs, top_k=50)
-    flu_prof = fluency_profile_table(docs, top_k=200)
-    lang_rows = [r.asDict() for r in lang_prof.collect()]
-    flu_rows = [r.asDict() for r in flu_prof.collect()]
+    lang_rows = [r.asDict() for r in lang_profile_table(docs, top_k=50).collect()]
+    flu_rows = [r.asDict()
+                for r in fluency_profile_table(docs, top_k=200).collect()]
 
-    # batch parity: dictionary UDF == relational classify
-    want_lang = {tuple(r) for r in lang_id_classify(docs, lang_prof).collect()}
+    # batch parity: dictionary UDF == DuckDB oracle (q_lang_id trains at
+    # top_k=50, q_fluency at top_k=200)
+    oracles = entrymod.oracle_sql()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs_path}'")
+    want_lang = set(con.sql(oracles["q_lang_id"]).fetchall())
     got_lang = {tuple(r)
                 for r in lang_id_classify_stream(docs, lang_rows).collect()}
     assert got_lang == want_lang and got_lang
 
-    want_flu = {tuple(r) for r in fluency_classify(docs, flu_prof).collect()}
+    want_flu = set(con.sql(oracles["q_fluency"]).fetchall())
     got_flu = {tuple(r)
                for r in fluency_classify_stream(docs, flu_rows).collect()}
     assert got_flu == want_flu and got_flu
@@ -524,12 +529,14 @@ def test_streaming_source_quota_admission(spark, tmp_path):
 
 
 def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
-    """quantize_int8 and hash_project are pure per-row expressions, so
-    applying them on streaming ingest (availableNow across two file
-    waves) must be BIT-EQUAL to the batch result over the union — the
-    same train-nothing/apply-on-ingest contract as the pretrained
-    classifiers. hash_project takes dim explicitly on streams (a
-    streaming plan cannot run the one-row dimensionality probe)."""
+    """quantize_int8 and hash_project are pure per-row maps, so applying
+    them on streaming ingest (availableNow across two file waves) must be
+    BIT-EQUAL to the batch result over the union — the same
+    train-nothing/apply-on-ingest contract as the pretrained
+    classifiers. hash_project reads d from the vectors each task sees,
+    so a stream needs no dimensionality argument; binarize_embeddings
+    takes dim explicitly on streams (a streaming plan cannot run its
+    one-row dimensionality probe)."""
     from marie_ai_spark.operators.similarity import (
         binarize_embeddings,
         hash_project,
@@ -569,7 +576,7 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
     for name, df in (
         ("quant_stream", quantize_int8(src)),
         *(
-            (f"proj{o}_stream", hash_project(src, out_dim=o, seed=1, dim=d))
+            (f"proj{o}_stream", hash_project(src, out_dim=o, seed=1))
             for o in out_dims
         ),
         ("bits_stream", binarize_embeddings(src, dim=d)),

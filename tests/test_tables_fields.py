@@ -558,8 +558,8 @@ def test_hybrid_empty_labels_returns_empty(spark):
 
 
 def test_hybrid_default_leaves_no_persisted_rdds(spark, corpus_sdf):
-    """materialize='none' (the default) must not leave any persisted RDD
-    behind after the result is materialized (ADVICE r4: the session-
+    """hybrid_annotate must not leave any persisted RDD behind after the
+    result is materialized (ADVICE r4: the session-
     lifetime MEMORY_AND_DISK persist leaked on every call). Compared
     against the pre-call count: the shared test session may already hold
     other modules' caches/localCheckpoints."""
@@ -587,23 +587,6 @@ def test_hybrid_broadcast_gate_fallback_identical(spark, corpus_sdf):
     slow = sorted(map(key, hybrid_annotate(
         corpus_sdf, max_broadcast_decisions=0).collect()))
     assert fast and fast == slow
-
-
-def test_hybrid_staging_materialize_identical(spark, corpus_sdf, tmp_path):
-    """materialize='staging' (the cluster-scale barrier: fan-out staged to
-    parquet, both passes read the files) is row-identical to the default
-    recompute path."""
-    from marie_ai_spark.operators.hybrid import hybrid_annotate
-
-    key = lambda r: (  # noqa: E731
-        r.conv_id, r.label, r.strategy, r.value,
-        r.turn_idx, r.line_no, r.tok_start, r.ngram_size, r.score,
-    )
-    base = sorted(map(key, hybrid_annotate(corpus_sdf).collect()))
-    staged = sorted(map(key, hybrid_annotate(
-        corpus_sdf, materialize="staging",
-        staging_dir=str(tmp_path / "cand")).collect()))
-    assert base and base == staged
 
 
 def test_hybrid_fallback_plan_is_lazy_shuffle_join(spark, corpus_sdf):
