@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cosine
 from ..session import local_df_1p
+from ..sources import commit
 
 
 def brute_force_topk(
@@ -393,13 +394,7 @@ def topk_int8_rerank(
     `shortlist`) back to the float table and re-scores exactly. Both
     stages round to 6dp with vec_id tie-breaks, so the result is
     deterministic and SQL-reproducible end to end."""
-    import builtins
-
-    dists = [
-        (builtins.sum((a - b) ** 2 for a, b in zip(query_vec, c)), ci)
-        for ci, c in enumerate(centroids)
-    ]
-    probe_cells = [ci for _d, ci in sorted(dists)[:nprobe]]
+    probe_cells = _probe_cells(query_vec, centroids, nprobe)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     cand = ivf_assign(embeddings, centroids).filter(
         F.col("cell").isin(probe_cells)
@@ -473,6 +468,18 @@ def ivf_assign(
     return _assign_arrow(embeddings, centroids, "embedding")
 
 
+def _probe_cells(query_vec, centroids, nprobe: int) -> list[int]:
+    """The nprobe cells whose centroids are nearest the query (squared
+    L2, ties to the lower cell id)."""
+    import builtins
+
+    dists = [
+        (builtins.sum((a - b) ** 2 for a, b in zip(query_vec, c)), ci)
+        for ci, c in enumerate(centroids)
+    ]
+    return [ci for _d, ci in sorted(dists)[:nprobe]]
+
+
 def ivf_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -482,13 +489,7 @@ def ivf_topk(
 ) -> DataFrame:
     """ANN top-k: score only vectors in the nprobe cells nearest the query.
     nprobe = len(centroids) degrades to exact brute force (tested)."""
-    import builtins
-
-    dists = [
-        (builtins.sum((a - b) ** 2 for a, b in zip(query_vec, c)), ci)
-        for ci, c in enumerate(centroids)
-    ]
-    probe_cells = [ci for _d, ci in sorted(dists)[:nprobe]]
+    probe_cells = _probe_cells(query_vec, centroids, nprobe)
     candidates = ivf_assign(embeddings, centroids).filter(
         F.col("cell").isin(probe_cells)
     )
@@ -538,16 +539,13 @@ def ivf_write_index(
     """Materialize the IVF index as a cell-partitioned parquet table — the
     100 TB layout: probes then touch only the nprobe nearest cells'
     partitions (directory-level pruning, no full scan). The quantizer
-    itself is metadata; persist it next to the data, along with the
-    per-cell vec_id manifest that lets `ivf_upsert` prune its stale-copy
-    hunt to candidate cells."""
+    itself is metadata; persist it next to the data."""
     import json
 
     # repartition by cell before the partitioned write (guide §6): one
     # file per cell directory instead of (#tasks x #cells) small files —
     # the parallel Arrow assignment otherwise fans every task into every
-    # cell dir, and each extra file taxes every later probe, manifest
-    # rebuild and upsert swap
+    # cell dir, and each extra file taxes every later probe and upsert
     ivf_assign(embeddings, centroids).repartition("cell").write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(path)
@@ -555,9 +553,6 @@ def ivf_write_index(
     local_df_1p(
         spark, [(json.dumps(centroids),)], "centroids_json string"
     ).write.mode("overwrite").parquet(path + "_quantizer")
-    _build_manifest_rows(
-        spark.read.parquet(path).select("cell", "vec_id")
-    ).write.mode("overwrite").parquet(path + "_manifest")
 
 
 def ivf_write_index_int8(
@@ -598,14 +593,8 @@ def ivf_topk_int8_indexed(
     float table. Same ranking semantics as topk_int8_rerank (6dp
     rounding, vec_id tie-breaks), so the two agree given the same
     quantizer — tested."""
-    import builtins
-
     centroids = ivf_read_quantizer(spark, int8_path)
-    dists = [
-        (builtins.sum((a - b) ** 2 for a, b in zip(query_vec, c)), ci)
-        for ci, c in enumerate(centroids)
-    ]
-    probe_cells = [ci for _d, ci in sorted(dists)[:nprobe]]
+    probe_cells = _probe_cells(query_vec, centroids, nprobe)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     cand = spark.read.parquet(int8_path).filter(
         F.col("cell").isin(probe_cells)
@@ -630,47 +619,45 @@ def binarize_embeddings(
     embeddings: DataFrame,
     vec_col: str = "embedding",
     out_col: str = "bits",
-    dim: int | None = None,
 ) -> DataFrame:
     """1-bit sign quantization, 32 dims packed per long — the 32x
     compression tier below int8 (Hamming-space candidate generation for
     cosine-ish retrieval; re-rank survivors on int8 or float). Bit j of
-    word w is `v[32w+j] > 0` (strict: zeros pack as 0 on every engine).
-    Packing words stay < 2^32, so long arithmetic never overflows and
-    the codes are integer-exact across engines. Pure JVM expressions,
-    scan-local; pass `dim` for streaming inputs (the default infers it
-    with a one-row probe)."""
-    d = dim if dim is not None else len(
-        embeddings.select(vec_col).first()[0]
-    )
+    word w is `v[32w+j] > 0` (strict: zeros and nulls pack as 0 on every
+    engine). Packing words stay < 2^32, so long arithmetic never
+    overflows and the codes are integer-exact across engines. One JVM
+    expression sized by each array's own length, scan-local, so batches
+    and streams need no dimensionality argument."""
     v = F.col(vec_col).cast("array<double>")
-    words = []
-    for w in range(0, d, 32):
-        terms = [
-            F.when(v[i] > 0, F.lit(1 << (i - w)))
-            .otherwise(F.lit(0))
-            .cast("long")
-            for i in range(w, min(d, w + 32))
-        ]
-        word = terms[0]
-        for t in terms[1:]:
-            word = word + t
-        words.append(word)
-    return embeddings.withColumn(out_col, F.array(*words))
+    n = F.size(v)
+
+    def word(w):
+        # Horner over the word's dims, highest first: acc*2 + bit
+        return F.aggregate(
+            F.sequence(F.least(w * 32 + 31, n - 1), w * 32, F.lit(-1)),
+            F.lit(0).cast("long"),
+            lambda acc, i: acc * 2 + F.when(v[i] > 0, 1).otherwise(0),
+        )
+
+    words = F.when(
+        n > 0, F.transform(
+            F.sequence(F.lit(0), F.floor((n - 1) / 32).cast("int")), word
+        )
+    ).otherwise(F.array().cast("array<long>"))
+    return embeddings.withColumn(out_col, words)
 
 
 def hamming_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    dim: int | None = None,
 ) -> DataFrame:
     """Top-k nearest by Hamming distance over the 1-bit codes: distance =
     popcount(xor) per packed word, folded JVM-side — integer-exact, so
     the oracle can verify through an INDEPENDENT formulation (counting
     differing signs dimension-wise) and must agree bit-for-bit. Ties to
     the lowest vec_id. TakeOrdered, no full sort."""
-    d = dim if dim is not None else len(query_vec)
+    d = len(query_vec)
     qbits = []
     for w in range(0, d, 32):
         word = 0
@@ -679,7 +666,7 @@ def hamming_topk(
                 word |= 1 << (i - w)
         qbits.append(word)
     qlit = F.array(*[F.lit(int(x)).cast("long") for x in qbits])
-    scored = binarize_embeddings(embeddings, dim=d).select(
+    scored = binarize_embeddings(embeddings).select(
         "vec_id",
         F.aggregate(
             F.zip_with(
@@ -726,450 +713,7 @@ def ann_recall_at_k(
     return local_df_1p(spark, parts, "tier string, recall double")
 
 
-# ------------------------------------------------------ id manifest (bloom)
-
-_MANIFEST_SCHEMA = (
-    "cell int, n long, min_id long, max_id long, "
-    "bloom binary, bloom_bits int, bloom_k int"
-)
-_BLOOM_K = 7  # ~1% fpr at 10 bits/key
-_BLOOM_MAX_BITS = 1 << 23  # 1 MiB per cell; beyond, fpr degrades gracefully
-
-
-def _bloom_mix(x, seed: int):
-    """splitmix64-style avalanche over uint64 ids; deterministic and
-    library-free, shared by manifest build and membership probe."""
-    import numpy as np
-
-    with np.errstate(over="ignore"):
-        z = x + np.uint64((seed * 0x9E3779B97F4A7C15) & 0xFFFFFFFFFFFFFFFF)
-        z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-        z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-        return z ^ (z >> np.uint64(31))
-
-
-def _bloom_bits_for(n: int) -> int:
-    import numpy as np
-
-    return int(
-        min(
-            _BLOOM_MAX_BITS,
-            max(1024, 1 << int(np.ceil(np.log2(max(2, 10 * n))))),
-        )
-    )
-
-
-#: per-cell id count above which the manifest build switches to the
-#: partial-bitmap path (ADVICE r7): below it a cell's whole id set is a
-#: bounded pandas group (<= ~32 MB of int64), above it no task may hold
-#: the cell in one frame
-_MANIFEST_MAX_GROUP_IDS = 4_000_000
-
-
-def _build_manifest_rows(
-    cell_ids: DataFrame, cell_counts: dict | None = None
-) -> DataFrame:
-    """Per-cell vec_id manifest (VERDICT r6 item 3): count, id range and
-    a bloom filter. The bloom is capped at 1 MiB per cell — on cells
-    holding more ids than the cap covers at 10 bits/key the
-    false-positive rate rises (never the false-NEGATIVE rate: pruning
-    stays sound, merely less sharp), so the manifest degrades toward the
-    min/max range check instead of growing unboundedly.
-
-    Build shape (ADVICE r7): when any cell exceeds
-    _MANIFEST_MAX_GROUP_IDS ids, the build runs as PARTIAL per-partition
-    bitmaps OR-merged per cell, so no task ever materializes a hot
-    cell's id set — at 100 TB a hot cell concentrates corpus-fraction
-    ids. Below the bound the one-Arrow-stage-per-cell build is strictly
-    cheaper (no stats pass, no second shuffle) and its group memory is
-    bounded by the same constant. `cell_counts` (cell -> exact row
-    count, e.g. the upsert's verified staging checksums) skips the
-    sizing aggregate; without it one k-row stats job decides. Both
-    paths emit byte-identical manifests (same mix, same bits; OR is
-    associative/commutative)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = cell_ids.sparkSession
-    if cell_counts is not None and all(
-        n <= _MANIFEST_MAX_GROUP_IDS for n in cell_counts.values()
-    ):
-        return _build_manifest_rows_grouped(cell_ids)
-    stats = {
-        int(r.cell): (int(r.n), int(r.mn), int(r.mx))
-        for r in cell_ids.groupBy("cell").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("vec_id").alias("mn"),
-            F.max("vec_id").alias("mx"),
-        ).collect()
-    }
-    if all(n <= _MANIFEST_MAX_GROUP_IDS for n, _, _ in stats.values()):
-        return _build_manifest_rows_grouped(cell_ids)
-    bits_by_cell = {c: _bloom_bits_for(n) for c, (n, _, _) in stats.items()}
-    bc = spark.sparkContext.broadcast(bits_by_cell)
-
-    def partials(it):
-        for pdf in it:
-            rows_c, rows_b = [], []
-            for cell, grp in pdf.groupby("cell", sort=False):
-                cell = int(cell)
-                bits = bc.value[cell]
-                idsu = grp["vec_id"].to_numpy(np.int64).view(np.uint64)
-                arr = np.zeros(bits // 8, np.uint8)
-                for i in range(_BLOOM_K):
-                    pos = (
-                        _bloom_mix(idsu, i + 1) % np.uint64(bits)
-                    ).astype(np.int64)
-                    np.bitwise_or.at(
-                        arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8)
-                    )
-                rows_c.append(cell)
-                rows_b.append(arr.tobytes())
-            yield pd.DataFrame({"cell": pd.Series(rows_c, dtype="int32"),
-                                "part": rows_b})
-
-    part_df = cell_ids.mapInPandas(partials, "cell int, part binary")
-    stats_bc = spark.sparkContext.broadcast(stats)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        cell = int(pdf["cell"].iloc[0])
-        n, mn, mx = stats_bc.value[cell]
-        bits = _bloom_bits_for(n)
-        arr = np.zeros(bits // 8, np.uint8)
-        for b in pdf["part"]:
-            arr |= np.frombuffer(b, np.uint8)
-        return pd.DataFrame(
-            {
-                "cell": [cell],
-                "n": [n],
-                "min_id": [mn],
-                "max_id": [mx],
-                "bloom": [arr.tobytes()],
-                "bloom_bits": [bits],
-                "bloom_k": [_BLOOM_K],
-            }
-        )
-
-    return part_df.groupBy("cell").applyInPandas(merge, _MANIFEST_SCHEMA)
-
-
-def _build_manifest_rows_grouped(cell_ids: DataFrame) -> DataFrame:
-    """One-Arrow-stage-per-cell manifest build — the cheap path for cells
-    bounded by _MANIFEST_MAX_GROUP_IDS (the common case; the partial
-    path above takes over beyond it)."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy(np.int64)
-        idsu = ids.view(np.uint64)
-        n = len(ids)
-        bits = _bloom_bits_for(n)
-        arr = np.zeros(bits // 8, np.uint8)
-        for i in range(_BLOOM_K):
-            pos = (_bloom_mix(idsu, i + 1) % np.uint64(bits)).astype(
-                np.int64
-            )
-            np.bitwise_or.at(
-                arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8)
-            )
-        return pd.DataFrame(
-            {
-                "cell": [int(pdf["cell"].iloc[0])],
-                "n": [n],
-                "min_id": [int(ids.min())],
-                "max_id": [int(ids.max())],
-                "bloom": [arr.tobytes()],
-                "bloom_bits": [bits],
-                "bloom_k": [_BLOOM_K],
-            }
-        )
-
-    return cell_ids.groupBy("cell").applyInPandas(fn, _MANIFEST_SCHEMA)
-
-
-def _read_manifest(spark, path: str):
-    """Manifest rows, or None when absent/unreadable (the hunt then
-    falls back to the full vec_id-projection scan and the commit rebuilds
-    the manifest). Driver memory is bounded: blooms load only while
-    their total size fits _MANIFEST_COLLECT_CAP, else range-only rows."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    mpath = path + "_manifest"
-    if not fs.exists(P(mpath)):
-        return None
-    try:
-        m = spark.read.parquet(mpath)
-        total = m.agg(F.sum(F.length("bloom"))).first()[0] or 0
-        if total > _MANIFEST_COLLECT_CAP:
-            rows = m.select("cell", "n", "min_id", "max_id").collect()
-            return [
-                (r.cell, r.min_id, r.max_id, None, 0, 0) for r in rows
-            ]
-        rows = m.collect()
-        return [
-            (r.cell, r.min_id, r.max_id, bytes(r.bloom), r.bloom_bits,
-             r.bloom_k)
-            for r in rows
-        ]
-    except Exception:
-        return None
-
-
-_MANIFEST_COLLECT_CAP = 64 * 1024 * 1024
-
-
-def _manifest_candidate_cells(
-    ids: DataFrame, infos: list[tuple], spark
-) -> list[int]:
-    """Cells whose manifest CAN contain any of the batch ids: the blooms
-    (bounded index metadata) are broadcast and the BATCH is streamed
-    through them in Arrow partitions — distributed over the batch, never
-    a collect of it. Range check first, bloom probe second; a cell with
-    a degraded (None) bloom passes on range alone. Sound: blooms have no
-    false negatives, so every cell truly holding a batch id is returned."""
-    import numpy as np
-    import pandas as pd
-
-    if not infos:
-        return []
-    bc = spark.sparkContext.broadcast(infos)
-
-    def fn(it):
-        found = set()
-        for pdf in it:
-            ids_np = pdf["vec_id"].to_numpy(np.int64)
-            idsu = ids_np.view(np.uint64)
-            for cell, mn, mx, bloom, bits, k in bc.value:
-                if cell in found:
-                    continue
-                m = (ids_np >= mn) & (ids_np <= mx)
-                if not m.any():
-                    continue
-                if bloom is None:
-                    found.add(cell)
-                    continue
-                sel = idsu[m]
-                arr = np.frombuffer(bloom, np.uint8)
-                ok = np.ones(len(sel), bool)
-                for i in range(k):
-                    pos = (
-                        _bloom_mix(sel, i + 1) % np.uint64(bits)
-                    ).astype(np.int64)
-                    ok &= (
-                        (arr[pos >> 3].astype(np.uint32) >> (pos & 7)) & 1
-                    ) == 1
-                    if not ok.any():
-                        break
-                if ok.any():
-                    found.add(cell)
-        yield pd.DataFrame({"cell": np.array(sorted(found), dtype="int32")})
-
-    return sorted(
-        r.cell
-        for r in ids.mapInPandas(fn, "cell int").distinct().collect()
-    )
-
-
-# --------------------------------------------- crash-safe upsert commit
-
-#: diagnostics of the most recent ivf_upsert in this process (tests and
-#: operators read it the way hybrid exposes LAST_CALL_INFO)
-LAST_UPSERT_INFO: dict = {}
-
-
-def _ivf_fs(spark, path: str):
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return P, fs
-
-
-def _rename_or_raise(fs, src, dst) -> None:
-    if not fs.rename(src, dst):
-        raise IOError(f"ivf_upsert: rename {src} -> {dst} failed")
-
-
-#: commit-lock lease: a lock older than this is considered abandoned even
-#: when PID liveness cannot be checked (different host on a shared store)
-_UPSERT_LOCK_LEASE_S = 900
-
-
-def _lock_path(path: str) -> str:
-    return f"{path}/.upsert_lock"
-
-
-def _try_acquire_upsert_lock(spark, path: str) -> bool:
-    """Best-effort writer/recoverer exclusivity for the upsert commit
-    (ADVICE r7 medium): an atomic createNewFile under the index root.
-    A held lock is broken only when its owner is provably dead — same
-    host and the PID is gone — or when it is older than the lease.
-    Returns False when a LIVE owner holds it (caller must not mutate)."""
-    import json as _json
-    import os
-    import socket
-    import time
-
-    P, fs = _ivf_fs(spark, path)
-    lp = P(_lock_path(path))
-    for _ in range(2):
-        try:
-            out = fs.create(lp, False)  # overwrite=False -> atomic create
-            out.write(
-                _json.dumps(
-                    {"pid": os.getpid(), "host": socket.gethostname(),
-                     "ts": time.time()}
-                ).encode()
-            )
-            out.close()
-            return True
-        except Exception:
-            # lock exists (or raced): decide whether its owner is dead
-            try:
-                st = fs.getFileStatus(lp)
-                age = time.time() - st.getModificationTime() / 1000.0
-                info = {}
-                try:
-                    stream = fs.open(lp)
-                    raw = bytes(
-                        stream.readAllBytes()
-                        if hasattr(stream, "readAllBytes")
-                        else b""
-                    )
-                    stream.close()
-                    info = _json.loads(raw.decode() or "{}")
-                except Exception:
-                    info = {}
-                same_host = info.get("host") == socket.gethostname()
-                pid_dead = False
-                if same_host and isinstance(info.get("pid"), int):
-                    try:
-                        os.kill(info["pid"], 0)
-                    except ProcessLookupError:
-                        pid_dead = True
-                    except PermissionError:
-                        pid_dead = False
-                if pid_dead or age > _UPSERT_LOCK_LEASE_S:
-                    fs.delete(lp, False)
-                    continue  # retry the atomic create
-            except Exception:
-                pass
-            return False
-    return False
-
-
-def _release_upsert_lock(spark, path: str) -> None:
-    P, fs = _ivf_fs(spark, path)
-    try:
-        fs.delete(P(_lock_path(path)), False)
-    except Exception:
-        pass
-
-
-def ivf_recover(spark, path: str, _locked: bool = False) -> bool:
-    """Repair an interrupted ivf_upsert commit (VERDICT r6 item 2 /
-    ADVICE r6 medium — the compact_extracted recovery pattern applied to
-    the index seam). Commit protocol: stage (partitioned by cell) ->
-    verify counts+checksums -> write a pending MARKER (atomic dir
-    rename) -> per-cell swap renames -> cleanup -> delete marker last.
-
-    Recovery rule: a pending marker means the staged image was already
-    verified complete, so the repair rolls FORWARD — every marker cell
-    still in staging is swapped in, every marker-emptied cell's live dir
-    is removed — leaving the index fully post-upsert; the possibly-stale
-    manifest is dropped (rebuilt on the next upsert). Staging/trash dirs
-    with NO marker are pre-commit debris: deleted, leaving the index
-    fully pre-upsert. Either way the index is never part-old/part-new
-    after recovery, and orphaned scratch dirs are reaped. The scan is
-    one bounded listStatus (n_cells + debris entries); no-op when clean.
-
-    Exclusivity (ADVICE r7 medium): recovery mutates the live layout, so
-    it runs ONLY under the upsert commit lock. A recover invoked while a
-    LIVE writer holds the lock — e.g. the read path racing an in-flight
-    upsert — returns False without touching anything (the writer will
-    finish or its crash leaves a breakable lock), so a reader can never
-    delete a healthy writer's staging or race its swap renames. A lock
-    whose owner is provably dead (same-host PID gone) or older than the
-    lease is broken and recovery proceeds. Returns True if anything was
-    repaired."""
-    P, fs = _ivf_fs(spark, path)
-    root = P(path)
-    if not fs.exists(root):
-        return False
-    pending, debris = [], []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name == ".upsert_lock":
-            continue
-        if name.startswith(".upsert_pending_") and not name.endswith(
-            ".tmp"
-        ):
-            pending.append(name)
-        elif name.startswith(
-            (".upsert_staging_", ".upsert_trash_",
-             ".upsert_manifest_stage_", ".upsert_pending_")
-        ):
-            debris.append(name)
-    if not pending and not debris:
-        return False
-    if not _locked:
-        if not _try_acquire_upsert_lock(spark, path):
-            return False  # a live owner holds the commit lock: hands off
-        try:
-            return ivf_recover(spark, path, _locked=True)
-        finally:
-            _release_upsert_lock(spark, path)
-    live_runs = set()
-    for name in pending:
-        row = spark.read.parquet(f"{path}/{name}").first()
-        run, cells, emptied = row.run, list(row.cells), list(row.emptied)
-        live_runs.add(run)
-        stage, trash = (
-            f"{path}/.upsert_staging_{run}",
-            f"{path}/.upsert_trash_{run}",
-        )
-        fs.mkdirs(P(trash))
-        for c in cells:
-            s, live = P(f"{stage}/cell={c}"), P(f"{path}/cell={c}")
-            if fs.exists(s):
-                if fs.exists(live):
-                    _rename_or_raise(fs, live, P(f"{trash}/cell={c}"))
-                _rename_or_raise(fs, s, live)
-        for c in emptied:
-            live = P(f"{path}/cell={c}")
-            if fs.exists(live):
-                _rename_or_raise(
-                    fs, live, P(f"{trash}/cell={c}__emptied")
-                )
-        fs.delete(P(trash), True)
-        fs.delete(P(stage), True)
-        # reap this run's manifest stage here too (ADVICE r7: it used to
-        # survive one extra recover because live_runs excluded it below)
-        fs.delete(P(f"{path}/.upsert_manifest_stage_{run}"), True)
-        # the manifest may predate this commit: drop it; the next upsert
-        # falls back to the full hunt and rebuilds it
-        fs.delete(P(path + "_manifest"), True)
-        fs.delete(P(f"{path}/{name}"), True)
-    for name in debris:
-        run = name.rsplit("_", 1)[-1].removesuffix(".tmp")
-        if run not in live_runs:
-            fs.delete(P(f"{path}/{name}"), True)
-    return True
-
-
-def _cell_checksums(df: DataFrame) -> dict:
-    """Per-cell (rows, order-independent checksum) over every column —
-    the staged-image verification (decimal(38,0) accumulator: ANSI-safe
-    at any row count, mirroring plans/pipeline.partition_metrics)."""
-    cols = [F.col(c) for c in df.columns]
-    rows = df.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
-        .cast("string")
-        .alias("checksum"),
-    ).collect()
-    return {r.cell: (r.rows, r.checksum) for r in rows}
+# ------------------------------------------------ incremental index upsert
 
 
 def ivf_read_quantizer(spark, path: str) -> list[list[float]]:
@@ -1180,11 +724,7 @@ def ivf_read_quantizer(spark, path: str) -> list[list[float]]:
     )
 
 
-def ivf_upsert(
-    new_embeddings: DataFrame,
-    path: str,
-    new_ids_only: bool = False,
-) -> dict:
+def ivf_upsert(new_embeddings: DataFrame, path: str) -> dict:
     """Incremental maintenance of the written IVF index: upsert a batch of
     (vec_id, embedding) rows into the cell-partitioned table WITHOUT
     rebuilding it — the ingest path a 100 TB index needs (the reference
@@ -1197,249 +737,67 @@ def ivf_upsert(
     function of the embedding and probes stay consistent).
 
     Scale shape, per phase:
-      1. assign the batch JVM-side; collect its distinct cells — bounded
-         by n_centroids, index metadata.
-      2. stale-copy hunt (skipped when new_ids_only=True — the documented
-         bulk-ingest default for insert-only waves): an UPDATED embedding
-         can move its vector to a different cell, which would leave the
-         old row stranded in a partition the merge never rewrites. The
-         per-cell id MANIFEST (count/min/max + bloom, maintained at
-         index-write and upsert time) first prunes the non-touched cells
-         to the ones that CAN hold a batch id (blooms broadcast, batch
-         streamed through them — no collect of the batch); only those
-         candidate cells' vec_id columns are then scanned with the batch
-         ids broadcast into a semi-join — a columnar projection +
-         partition-pruned scan, no shuffle of the index. A missing or
-         unreadable manifest degrades to the full non-touched-cell scan
-         (sound, just un-pruned) and is rebuilt at commit.
-      3. merge = (touched-cell rows anti-joined on the broadcast batch
-         ids) UNION the assigned batch, STAGED to a hidden scratch dir
-         partitioned by cell, then VERIFIED (per-cell rows +
-         order-independent checksum of the staged copy must equal the
-         merge recomputed from the still-untouched live table).
-      4. commit (crash-safe, VERDICT r6 item 2): a pending MARKER
-         recording the staged + emptied cells is written via atomic
-         rename; each staged cell dir is then swapped in by two renames
-         (live -> trash, staged -> live) and each emptied cell's live
-         dir renamed away; trash/stage/marker are deleted last. A crash
-         anywhere is repaired by `ivf_recover` (run at the start of
-         every upsert and indexed read): marker present -> roll FORWARD
-         to fully post-upsert (the stage was verified before the marker
-         existed); no marker -> debris is deleted, index fully
-         pre-upsert. Never part-old/part-new.
-      5. the manifest rows for touched cells are recomputed from the
-         committed data and swapped in; marker deletion is the commit
-         point for data + manifest together.
+      1. assign the batch JVM-side; one aggregation yields its distinct
+         cells (bounded by n_centroids) and its size.
+      2. stale-copy hunt: an UPDATED embedding can move its vector to a
+         different cell, stranding the old row in a partition the merge
+         never rewrites, so the non-touched cells' vec_id column is
+         semi-joined with the broadcast batch ids (a columnar projection,
+         no shuffle of the index).
+      3. merge = (touched + stale cells' rows anti-joined on the batch
+         ids) UNION the assigned batch, committed by one commit.Commit
+         partitioned by cell (staged, verified, claimed, swapped); a
+         stale cell left empty is removed. A crash after the claim is
+         rolled forward by the next upsert or indexed read; if another
+         upsert commits first this raises commit.CommitConflict, and a
+         rerun applies the batch on top.
 
-    Returns {n_batch, cells_touched, cells_stale, cells_emptied,
-    cells_hunted, hunt_mode}; the same diagnostics land in
-    LAST_UPSERT_INFO."""
-    import uuid as _uuid
-
+    Returns {n_batch, cells_touched, cells_stale, cells_emptied}."""
     spark = new_embeddings.sparkSession
-    # Writer exclusivity (ADVICE r7 medium): the whole upsert — recovery,
-    # staging, swap, manifest — runs under the commit lock, so concurrent
-    # readers' recover calls become no-ops instead of racing the swap or
-    # deleting this run's pre-marker staging. Released in the finally; a
-    # hard crash leaves it breakable (dead-PID / lease check).
-    if not _try_acquire_upsert_lock(spark, path):
-        raise IOError(
-            f"ivf_upsert: another upsert holds the commit lock on {path}"
-        )
-    try:
-        return _ivf_upsert_locked(new_embeddings, spark, path, new_ids_only)
-    finally:
-        _release_upsert_lock(spark, path)
-
-
-def _ivf_upsert_locked(
-    new_embeddings: DataFrame, spark, path: str, new_ids_only: bool
-) -> dict:
-    import uuid as _uuid
-
-    ivf_recover(spark, path, _locked=True)
-    centroids = ivf_read_quantizer(spark, path)
-    index_cols = [
-        c for c in spark.read.parquet(path).columns if c != "cell"
-    ]
-    if set(new_embeddings.columns) != set(index_cols):
-        raise ValueError(
-            f"upsert batch columns {sorted(new_embeddings.columns)} must "
-            f"match the index payload columns {sorted(index_cols)}"
-        )
-    batch = ivf_assign(new_embeddings, centroids)
-    # one aggregation pass yields the touched-cell set AND the batch row
-    # count (previously a separate batch.count() job at the end)
-    cell_counts = batch.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n")
-    ).collect()
-    touched = sorted(r.cell for r in cell_counts)
-    n_batch = sum(r.n for r in cell_counts)
-    LAST_UPSERT_INFO.clear()
-    if not touched:
-        LAST_UPSERT_INFO.update(hunt_mode="skipped", cells_hunted=[])
-        return {"n_batch": 0, "cells_touched": [], "cells_stale": [],
-                "cells_emptied": [], "cells_hunted": [],
-                "hunt_mode": "skipped"}
-    ids = batch.select("vec_id").distinct()
-    index = spark.read.parquet(path)  # (re-read after the column check)
-    stale_cells: list[int] = []
-    hunt_cells: list[int] = []
-    hunt_mode = "skipped"
-    if not new_ids_only:
-        manifest = _read_manifest(spark, path)
-        if manifest is None:
-            hunt_mode = "full"
-            hunted = index.filter(~F.col("cell").isin(touched))
-        else:
-            hunt_mode = "manifest"
-            hunt_cells = _manifest_candidate_cells(
-                ids,
-                [m for m in manifest if m[0] not in set(touched)],
-                spark,
+    with commit.Commit(spark, path) as c:
+        centroids = ivf_read_quantizer(spark, path)
+        index = spark.read.parquet(path)
+        index_cols = [col for col in index.columns if col != "cell"]
+        if set(new_embeddings.columns) != set(index_cols):
+            raise ValueError(
+                f"upsert batch columns {sorted(new_embeddings.columns)} "
+                f"must match the index payload columns {sorted(index_cols)}"
             )
-            hunted = (
-                index.filter(F.col("cell").isin(hunt_cells))
-                if hunt_cells
-                else None
-            )
-        if hunted is not None:
-            stale_cells = sorted(
-                r.cell
-                for r in hunted
-                .join(F.broadcast(ids), "vec_id", "left_semi")
-                .select("cell")
-                .distinct()
-                .collect()
-            )
-    LAST_UPSERT_INFO.update(hunt_mode=hunt_mode, cells_hunted=hunt_cells)
-    all_touched = sorted(set(touched) | set(stale_cells))
-    keep_old = index.filter(F.col("cell").isin(all_touched)).join(
-        F.broadcast(ids), "vec_id", "left_anti"
-    )
-    # persisted: the merge is consumed three times (staged write, expect
-    # checksum, manifest rebuild) and recomputing it costs an index scan
-    # + anti-join each time
-    merged = keep_old.unionByName(batch.select(keep_old.columns)).persist()
-
-    run = _uuid.uuid4().hex
-    P, fs = _ivf_fs(spark, path)
-    stage = f"{path}/.upsert_staging_{run}"
-    # one file per staged cell dir (guide §6) — fewer files to verify,
-    # rename and later scan
-    merged.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(stage)
-    # re-select in merged's column order AND types: `cell` comes back as
-    # an inferred partition column, and the checksum hashes (cols, types)
-    staged = spark.read.parquet(stage).select(
-        *[F.col(f.name).cast(f.dataType) for f in merged.schema.fields]
-    )
-    expect = _cell_checksums(merged)
-    got = _cell_checksums(staged)
-    if expect != got:
-        fs.delete(P(stage), True)
-        merged.unpersist()
-        raise IOError(
-            f"ivf_upsert: staged image mismatch (expected {expect}, "
-            f"staged {got}); live index untouched"
+        batch = ivf_assign(new_embeddings, centroids)
+        cell_counts = batch.groupBy("cell").agg(
+            F.count(F.lit(1)).alias("n")
+        ).collect()
+        touched = sorted(r.cell for r in cell_counts)
+        if not touched:
+            return {"n_batch": 0, "cells_touched": [], "cells_stale": [],
+                    "cells_emptied": []}
+        ids = F.broadcast(batch.select("vec_id").distinct())
+        stale = sorted(
+            r.cell
+            for r in index.filter(~F.col("cell").isin(touched))
+            .join(ids, "vec_id", "left_semi")
+            .select("cell")
+            .distinct()
+            .collect()
         )
-    staged_cells = sorted(got)
-    emptied = sorted(set(all_touched) - set(staged_cells))
-
-    # ADVICE r7: the post-commit manifest rebuild must not depend on the
-    # persisted merge's LINEAGE — if cached partitions are lost on a
-    # cluster, recomputation re-reads a pre-commit file listing whose
-    # files the swap renames away (spurious FileNotFound after a
-    # successful commit). The eager localCheckpoint pins the bounded
-    # (cell, vec_id) projection as lineage-free blocks BEFORE any rename.
-    manifest_src = merged.select("cell", "vec_id").localCheckpoint()
-
-    marker_tmp = f"{path}/.upsert_pending_{run}.tmp"
-    marker = f"{path}/.upsert_pending_{run}"
-    local_df_1p(
-        spark,
-        [(run, staged_cells, emptied)],
-        "run string, cells array<int>, emptied array<int>",
-    ).write.mode("overwrite").parquet(marker_tmp)
-    _rename_or_raise(fs, P(marker_tmp), P(marker))
-
-    trash = f"{path}/.upsert_trash_{run}"
-    fs.mkdirs(P(trash))
-    for c in staged_cells:
-        live = P(f"{path}/cell={c}")
-        if fs.exists(live):
-            _rename_or_raise(fs, live, P(f"{trash}/cell={c}"))
-        _rename_or_raise(fs, P(f"{stage}/cell={c}"), live)
-    for c in emptied:
-        live = P(f"{path}/cell={c}")
-        if fs.exists(live):
-            _rename_or_raise(fs, live, P(f"{trash}/cell={c}__emptied"))
-    fs.delete(P(trash), True)
-    fs.delete(P(stage), True)
-    # the verified merge IS the committed content of the touched cells, so
-    # the manifest refresh needs no re-read of the live table
-    _rewrite_manifest(
-        spark, path, all_touched, run,
-        touched_src=manifest_src,
-        # the verified staging checksums already carry exact per-cell
-        # row counts — the manifest build sizes its blooms from them
-        # without a sizing aggregate
-        cell_counts={c: rows for c, (rows, _ck) in got.items()},
-    )
-    fs.delete(P(marker), True)
-
-    merged.unpersist()
-    result = {
-        "n_batch": n_batch,
+        all_touched = sorted(set(touched) | set(stale))
+        keep_old = index.filter(F.col("cell").isin(all_touched)).join(
+            ids, "vec_id", "left_anti"
+        )
+        # one file per staged cell dir (guide §6): fewer files to verify,
+        # rename and later scan
+        res = c.replace_partitions(
+            keep_old.unionByName(batch.select(keep_old.columns))
+            .repartition("cell"),
+            "cell",
+            all_touched,
+        )
+    return {
+        "n_batch": sum(r.n for r in cell_counts),
         "cells_touched": all_touched,
-        "cells_stale": stale_cells,
-        "cells_emptied": emptied,
-        "cells_hunted": hunt_cells,
-        "hunt_mode": hunt_mode,
+        "cells_stale": stale,
+        "cells_emptied": res["emptied"],
     }
-    LAST_UPSERT_INFO.update(result)
-    return result
-
-
-def _rewrite_manifest(
-    spark, path: str, touched: list[int], run: str,
-    touched_src: DataFrame | None = None,
-    cell_counts: dict | None = None,
-) -> None:
-    """Swap in fresh manifest rows for the touched cells (or rebuild the
-    whole manifest when it was missing): staged to a hidden dir, old
-    manifest deleted, stage renamed in. A crash between delete and
-    rename just leaves the manifest absent — the hunt then falls back to
-    the full scan, so the manifest is never trusted stale.
-
-    `touched_src` is the verified (cell, vec_id) content of the touched
-    cells (the upsert's persisted merge) — using it skips a re-read of
-    the just-committed live table; the full rebuild (manifest missing)
-    must still read the whole index."""
-    P, fs = _ivf_fs(spark, path)
-    mpath = path + "_manifest"
-    if fs.exists(P(mpath)):
-        src = (
-            touched_src
-            if touched_src is not None
-            else spark.read.parquet(path)
-            .select("cell", "vec_id")
-            .filter(F.col("cell").isin(touched))
-        )
-        fresh = _build_manifest_rows(src, cell_counts=cell_counts)
-        keep = spark.read.parquet(mpath).filter(
-            ~F.col("cell").isin(touched)
-        )
-        new = keep.unionByName(fresh)
-    else:
-        new = _build_manifest_rows(
-            spark.read.parquet(path).select("cell", "vec_id")
-        )
-    stage = f"{path}/.upsert_manifest_stage_{run}"
-    new.write.mode("overwrite").parquet(stage)
-    fs.delete(P(mpath), True)
-    _rename_or_raise(fs, P(stage), P(mpath))
 
 
 def ivf_topk_indexed(
@@ -1451,18 +809,13 @@ def ivf_topk_indexed(
 ) -> DataFrame:
     """ANN top-k over the WRITTEN index: the cell filter is a partition
     predicate, so the scan reads only the probed cells' files (verify via
-    PartitionFilters in the plan — tested). Repairs an interrupted
-    upsert commit first (bounded listStatus, no-op when clean) so a
-    reader never sees a part-old/part-new index."""
-    import builtins
-
-    ivf_recover(spark, path)
+    PartitionFilters in the plan — tested). Rolls forward an upsert whose
+    writer died after claiming its version first (commit.recover: one
+    listing when there is nothing to do), so a reader never sees a
+    part-old/part-new index."""
+    commit.recover(spark, path)
     centroids = ivf_read_quantizer(spark, path)
-    dists = [
-        (builtins.sum((a - b) ** 2 for a, b in zip(query_vec, c)), ci)
-        for ci, c in enumerate(centroids)
-    ]
-    probe_cells = [ci for _d, ci in sorted(dists)[:nprobe]]
+    probe_cells = _probe_cells(query_vec, centroids, nprobe)
     candidates = spark.read.parquet(path).filter(
         F.col("cell").isin(probe_cells)
     )

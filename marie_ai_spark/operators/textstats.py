@@ -319,8 +319,11 @@ def lang_id_classify_stream(
              "score": pd.array(scores, dtype="Int64")}
         )
 
-    d = F.pandas_udf(fn, "struct<predicted_lang:string,score:bigint>")(
-        F.col("text")
+    # nondeterministic: a filter on a deterministic UDF's output is pushed
+    # below the projection computing it, and every document is scored twice
+    d = (
+        F.pandas_udf(fn, "struct<predicted_lang:string,score:bigint>")
+        .asNondeterministic()(F.col("text"))
     )
     return (
         documents.select(

@@ -18,7 +18,8 @@ buckets atomically on a real cluster; the IO layer is isolated here so the
 parquet fallback and an Iceberg catalog are interchangeable).
 
 Checksum is order-independent (`sum(xxhash64(conv_id, turn_idx))` per
-bucket) so it is stable under any task/partition order at any scale.
+bucket) so it is stable under any task/partition order at any scale;
+`compacted` rows carry the commit's all-column checksum instead.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_df_1p
+from ..sources import commit
 
 LINEAGE_SCHEMA = (
     "run_id string, partition_id int, status string, rows_in long, "
@@ -78,13 +80,12 @@ def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:
 
     A plain `.mode("append")` stages every job under the SAME
     `<path>/_temporary/0` dir (FileOutputCommitter), so the first job to
-    commit deletes a concurrent job's staged files — the reason the seam
-    historically disclaimed multi-writer use. Instead each append writes
-    to a private `<path>__stage_<uuid>` dir and renames its part files
-    into the table under uuid-unique names (one atomic rename per file on
-    any Hadoop FS). Disjoint-bucket jobs can therefore append lineage
-    concurrently; proven by tests/test_resume.py's concurrent-writer
-    test."""
+    commit deletes a concurrent job's staged files. Instead each append
+    writes to a private `<path>__stage_<uuid>` dir and commit.publish_files
+    moves its part files into the table under uuid-unique names, each by a
+    rename that refuses an existing target. Disjoint-bucket jobs can
+    therefore append lineage concurrently; proven by tests/test_resume.py's
+    concurrent-writer test."""
     if not rows:
         return
     df = local_df_1p(
@@ -108,26 +109,7 @@ def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:
     tag = uuid.uuid4().hex
     stage = f"{path}__stage_{tag}"
     df.write.mode("overwrite").parquet(stage)
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.mkdirs(Path(path))
-    i = 0
-    for st in fs.listStatus(Path(stage)):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        dest = Path(f"{path}/part-{tag}-{i}.parquet")
-        # Hadoop FileSystem.rename reports most failures by returning
-        # false, not throwing — an unchecked false here would silently
-        # drop the bucket's lineage rows and resume would reprocess it.
-        if not fs.rename(st.getPath(), dest):
-            fs.delete(Path(stage), True)
-            raise IOError(
-                f"append_lineage: rename {st.getPath()} -> {dest} failed"
-            )
-        i += 1
-    fs.delete(Path(stage), True)
+    commit.publish_files(spark, stage, path, f"part-{tag}")
 
 
 def partition_metrics(extracted_with_bucket: DataFrame) -> DataFrame:

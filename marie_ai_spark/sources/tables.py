@@ -1,21 +1,20 @@
 """Table IO abstraction: one seam for parquet-directory tables today and
 an Iceberg catalog on a real cluster.
 
-The engine's durability semantics (lineage claim/complete, dynamic
-partition overwrite, appends) are expressed against this module so the
-storage backend is swappable:
+Spark-written appends and partition replacement go through this class so
+the storage backend is swappable:
 
   - parquet backend (sandbox default): directory-per-table,
-    partitionOverwriteMode=dynamic emulates partition-level MERGE
-  - iceberg backend: same calls route to `writeTo(...)` /
-    `MERGE INTO` when `spark.sql.catalog.<name>` is configured with the
-    iceberg-spark-runtime jar (not bundled in this sandbox — the backend
-    raises a clear error if selected without the catalog present)
+    partitionOverwriteMode=dynamic replaces the partitions a write holds
+  - iceberg backend: same calls route to `writeTo(...)` when
+    `spark.sql.catalog.<name>` is configured with the iceberg-spark-runtime
+    jar (not bundled in this sandbox — the backend raises a clear error if
+    selected without the catalog present)
 
-The reference's durable state lives in PostgreSQL tables with lease CAS
-(marie/scheduler/fixtures.py:37-145); both backends here preserve the
-properties that matter: atomic per-partition replace and append-only
-metrics.
+Rewrites that must be verified before they replace live data (merge,
+compaction, the IVF upsert) and the lineage appends go through the commit
+protocol in `sources/commit.py` instead, which owns every filesystem
+change Spark's writer does not make.
 """
 
 from __future__ import annotations
@@ -44,29 +43,20 @@ class TableIO:
             return self.spark.read.table(f"{self.catalog}.{table}")
         return self.spark.read.parquet(table)
 
-    def exists(self, table: str) -> bool:
-        if self.backend == "iceberg":
-            return self.spark.catalog.tableExists(f"{self.catalog}.{table}")
-        import os
-
-        return os.path.exists(table)
-
     # -- writes --------------------------------------------------------
-    def append(self, df: DataFrame, table: str) -> None:
-        if self.backend == "iceberg":
-            df.writeTo(f"{self.catalog}.{table}").append()
-        else:
-            df.write.mode("append").parquet(table)
-
     def overwrite_partitions(self, df: DataFrame, table: str,
-                             partition_col: str) -> None:
-        """Replace only the partitions present in df (idempotent re-runs)."""
+                             partition_col: str,
+                             max_records_per_file: int = 0) -> None:
+        """Replace only the partitions present in df (idempotent re-runs).
+        `max_records_per_file` caps the rows per output file for this
+        write only (0: no cap)."""
         if self.backend == "iceberg":
             df.writeTo(f"{self.catalog}.{table}").overwritePartitions()
         else:
             (
                 df.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
+                .option("maxRecordsPerFile", max_records_per_file)
                 .partitionBy(partition_col)
                 .parquet(table)
             )

@@ -1180,13 +1180,13 @@ def test_ivf_upsert_insert_update_move_and_empty(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters" in plan and "cell" in plan
-    # no leftover scratch state (staging/trash/pending live INSIDE the
-    # index dir as dot-dirs since the crash-safe commit)
+    # no leftover scratch state: the commit's stage and trash live
+    # INSIDE the index dir as dot-dirs and are gone after the commit
     assert not [p.name for p in tmp_path.iterdir() if "upsert" in p.name]
     assert not [
         p.name
         for p in (tmp_path / "ivf_index").iterdir()
-        if p.name.startswith(".upsert_")
+        if p.name.startswith((".stage-", ".trash-"))
     ]
 
 
@@ -1217,11 +1217,11 @@ def test_ivf_upsert_empties_a_cell_dir(spark, tmp_path):
 
 
 def test_ivf_upsert_manifest_prunes_hunt(spark, tmp_path):
-    """VERDICT r6 item 3: with well-separated cells and an update batch
-    whose ids live in exactly one non-touched cell, the stale-copy hunt
-    must consult the id manifest and scan ONLY that candidate cell —
-    not every non-touched cell's vec_id column — while still finding
-    and clearing the stale copy."""
+    """With well-separated cells and an update batch whose only id lives
+    in one non-touched cell, the stale-copy hunt (the non-touched cells'
+    vec_id column semi-joined with the batch ids) must find that cell and
+    clear the stale copy, leaving every other row in place. (The per-cell
+    id manifest that once pruned this hunt is gone; the name is kept.)"""
     rows = [
         (i + 10 * c, [float(10 * (c % 2)) + 0.1 * i,
                       float(10 * (c // 2)) + 0.1 * i])
@@ -1237,10 +1237,6 @@ def test_ivf_upsert_manifest_prunes_hunt(spark, tmp_path):
         [(15, [0.5, 0.5])], "vec_id long, embedding array<double>"
     )
     r = similarity.ivf_upsert(batch, path)
-    assert r["hunt_mode"] == "manifest"
-    # id ranges are disjoint per cell, so the manifest prunes the hunt
-    # to exactly the cell holding the stale copy
-    assert r["cells_hunted"] == [1], r
     assert r["cells_stale"] == [1] and r["cells_touched"] == [0, 1]
     got = {
         (x.vec_id, x.cell)
@@ -1249,12 +1245,6 @@ def test_ivf_upsert_manifest_prunes_hunt(spark, tmp_path):
     assert (15, 0) in got
     assert not [v for v, c in got if v == 15 and c != 0]
     assert len(got) == 40
-    # insert-only waves skip the hunt entirely
-    ins = spark.createDataFrame(
-        [(100, [9.9, 0.2])], "vec_id long, embedding array<double>"
-    )
-    r2 = similarity.ivf_upsert(ins, path, new_ids_only=True)
-    assert r2["hunt_mode"] == "skipped" and r2["cells_hunted"] == []
 
 
 def test_rrf_fuse_math_missing_docs_and_ties(spark):

@@ -3,6 +3,8 @@ run with an injected stop after K partitions, re-run with the same run_id,
 assert exactly one output row per (conv_id, turn_idx) and that the first K
 partitions were not reprocessed."""
 
+import pathlib
+
 import pandas as pd
 import pytest
 
@@ -199,7 +201,8 @@ def _file_census(root):
     import os
 
     out = []
-    for dirpath, _dirs, files in os.walk(root):
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]  # commit metadata
         for f in files:
             if f.startswith(("_", ".")):
                 continue
@@ -320,16 +323,46 @@ def test_compaction_shrinks_files_preserves_data(spark, tmp_path):
     assert r3["processed"] == 0 and r3["skipped"] == 4
 
 
+class _Kill(BaseException):
+    """A driver dying mid-commit: `except Exception` cleanup does not run."""
+
+
+def _kill_after(monkeypatch, name, nth=1):
+    """Make the commit module's step `name` die right after its nth call."""
+    from marie_ai_spark.sources import commit
+
+    real, calls = getattr(commit, name), []
+
+    def wrapped(*a, **k):
+        out = real(*a, **k)
+        calls.append(1)
+        if len(calls) == nth:
+            raise _Kill(name)
+        return out
+
+    monkeypatch.setattr(commit, name, wrapped)
+
+
+def _commit_debris(table):
+    return [p.name for p in pathlib.Path(table).iterdir()
+            if p.name.startswith((".stage-", ".trash-"))]
+
+
 def test_compaction_verify_failure_leaves_live_table_untouched(
     spark, tmp_path, monkeypatch
 ):
     """If the staged rewrite fails verification, compaction must raise
     WITHOUT having deleted or replaced anything in the live table, and
     must clean up its staging dir (ADVICE r4: the old in-place overwrite
-    verified only after the before-image was gone)."""
+    verified only after the before-image was gone). The corruption is
+    injected at the commit module's verify step: a staged data file is
+    lost before the stage is read back."""
+    import os
+
     import pytest
 
     import marie_ai_spark.plans.pipeline as P
+    from marie_ai_spark.sources import commit
 
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
@@ -339,38 +372,32 @@ def test_compaction_verify_failure_leaves_live_table_untouched(
     before = read_extracted(spark, out).toPandas()
     census_before = _file_census(f"{out}/extracted")
 
-    orig = P.partition_metrics
-    calls = {"n": 0}
+    real = commit._verify
 
-    def corrupt_staged(df):
-        # first call = before-image, second call = staged copy
-        calls["n"] += 1
-        got = orig(df)
-        if calls["n"] == 2:
-            from pyspark.sql import functions as F
+    def corrupt_staged(spark_, stage, *a):
+        local = stage.removeprefix("file:")  # commit paths are URIs
+        part = sorted(d for d in os.listdir(local) if "=" in d)[0]
+        lost = sorted(f for f in os.listdir(f"{local}/{part}")
+                      if f.endswith(".parquet"))[0]
+        os.unlink(f"{local}/{part}/{lost}")
+        return real(spark_, stage, *a)
 
-            got = got.withColumn("checksum", F.lit("CORRUPT"))
-        return got
-
-    monkeypatch.setattr(P, "partition_metrics", corrupt_staged)
+    monkeypatch.setattr(commit, "_verify", corrupt_staged)
     with pytest.raises(RuntimeError, match="live table left untouched"):
         P.compact_extracted(spark, out, min_files=2)
-    monkeypatch.setattr(P, "partition_metrics", orig)
+    monkeypatch.setattr(commit, "_verify", real)
 
     # live table: identical data, identical file layout, no leftovers
     assert _file_census(f"{out}/extracted") == census_before
     assert read_extracted(spark, out).toPandas().equals(before)
-    leftovers = [p.name for p in (tmp_path / "out").iterdir()
-                 if p.name.startswith(".compact_")]
-    assert leftovers == []
+    assert _commit_debris(f"{out}/extracted") == []
 
 
-def test_compaction_crash_mid_swap_recovers(spark, tmp_path):
-    """A crash between the two swap renames leaves a bucket in trash and
-    missing from the live table; the next compact_extracted() call must
-    restore it before compacting, and the data must be unchanged."""
-    import shutil
-
+def test_compaction_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
+    """A compaction killed after swapping its first bucket (claimed, so
+    the rewrite is verified and committed) leaves the rest staged; the
+    next compact_extracted() call rolls it forward first, the data is
+    unchanged, every bucket is compacted and no debris is left."""
     from marie_ai_spark.plans.pipeline import compact_extracted
 
     inp = str(tmp_path / "in")
@@ -380,31 +407,28 @@ def test_compaction_crash_mid_swap_recovers(spark, tmp_path):
                 max_records_per_file=20)
     before = read_extracted(spark, out).toPandas()
 
-    # simulate the crash window: live bucket moved to trash, staged copy
-    # (identical here — the swap only runs on verified-identical images)
-    # still in staging
-    live = tmp_path / "out" / "extracted" / "_bucket=1"
-    trash = tmp_path / "out" / ".compact_trash_dead" / "_bucket=1"
-    staging = tmp_path / "out" / ".compact_staging_dead" / "_bucket=1"
-    trash.parent.mkdir()
-    staging.parent.mkdir()
-    shutil.copytree(live, staging)
-    shutil.move(str(live), str(trash))
-    assert not live.exists()
+    _kill_after(monkeypatch, "_swap_in")
+    with pytest.raises(_Kill):
+        compact_extracted(spark, out, min_files=2)
+    monkeypatch.undo()
+    assert _commit_debris(f"{out}/extracted"), "the kill must leave a stage"
 
     r = compact_extracted(spark, out, min_files=2)
-    assert r["buckets_compacted"] == 4  # bucket 1 recovered, then compacted
+    assert r["buckets_compacted"] == 0  # the rolled-forward commit did it
+    census = _file_census(f"{out}/extracted")
+    assert sorted(p.split("/")[0] for p, _ in census) == [
+        f"_bucket={b}" for b in range(4)
+    ]
     assert read_extracted(spark, out).toPandas().equals(before)
-    leftovers = [p.name for p in (tmp_path / "out").iterdir()
-                 if p.name.startswith(".compact_")]
-    assert leftovers == []
+    assert _commit_debris(f"{out}/extracted") == []
 
 
-def test_read_extracted_repairs_interrupted_swap(spark, tmp_path):
+def test_read_extracted_repairs_interrupted_swap(spark, tmp_path, monkeypatch):
     """ADVICE r5: a reader arriving BETWEEN a mid-swap crash and the next
-    compaction must not silently see a table missing the in-flight bucket.
-    read_extracted itself restores the bucket from trash before reading."""
-    import shutil
+    commit must not silently see a table missing the in-flight bucket.
+    read_extracted itself rolls the claimed version forward before
+    reading."""
+    from marie_ai_spark.plans.pipeline import compact_extracted
 
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
@@ -413,21 +437,51 @@ def test_read_extracted_repairs_interrupted_swap(spark, tmp_path):
                 max_records_per_file=20)
     before = read_extracted(spark, out).toPandas()
 
-    live = tmp_path / "out" / "extracted" / "_bucket=2"
-    trash = tmp_path / "out" / ".compact_trash_dead" / "_bucket=2"
-    staging = tmp_path / "out" / ".compact_staging_dead" / "_bucket=2"
-    trash.parent.mkdir()
-    staging.parent.mkdir()
-    shutil.copytree(live, staging)
-    shutil.move(str(live), str(trash))
+    # killed mid-way through the second bucket's swap: its live dir is
+    # in trash and its compacted copy still staged
+    from marie_ai_spark.sources import commit
+
+    real = commit._Fs.rename
+    calls = []
+
+    def rename(self, src, dst):
+        real(self, src, dst)
+        calls.append(dst)
+        # 1: the claim record; 2-3: bucket 0's swap; 4: bucket 1 to trash
+        if len(calls) == 4:
+            raise _Kill("mid swap")
+
+    monkeypatch.setattr(commit._Fs, "rename", rename)
+    with pytest.raises(_Kill):
+        compact_extracted(spark, out, min_files=2)
+    monkeypatch.undo()
+    live = tmp_path / "out" / "extracted" / calls[-1].rsplit("/", 1)[1]
     assert not live.exists()
 
     # plain read (no compaction in between) already repairs and is complete
     assert read_extracted(spark, out).toPandas().equals(before)
     assert live.exists()
-    leftovers = [p.name for p in (tmp_path / "out").iterdir()
-                 if p.name.startswith(".compact_")]
-    assert leftovers == []
+    assert _commit_debris(f"{out}/extracted") == []
+
+
+def test_run_extract_leaves_session_conf_unchanged(spark, tmp_path):
+    """max_records_per_file caps that run's own write only: the session's
+    spark.sql.files.maxRecordsPerFile must be what it was before, or
+    every later write in the session (other tests' included) inherits
+    the cap."""
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.files.maxRecordsPerFile"
+    before = spark.conf.get(key)
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    spark.createDataFrame(gen_pandas(30, seed=49)).write.parquet(inp)
+    run_extract(spark, inp, out, run_id="conf", n_buckets=2,
+                max_records_per_file=7)
+    assert spark.conf.get(key) == before
+    sizes = [pq.read_metadata(f"{out}/extracted/{p}").num_rows
+             for p, _ in _file_census(f"{out}/extracted")]
+    assert max(sizes) <= 7 and len(sizes) > 2
 
 
 def test_concurrent_disjoint_bucket_writers_converge(spark, tmp_path):
@@ -508,13 +562,13 @@ def _ivf_state(spark, path):
     }
 
 
-@pytest.mark.parametrize("crash", ["before_marker", "mid_swap", "after_swaps"])
+@pytest.mark.parametrize("crash", ["before_claim", "mid_swap", "before_done"])
 def test_ivf_upsert_kill_mid_commit(spark, tmp_path, monkeypatch, crash):
     """VERDICT r6 item 2: a kill anywhere inside ivf_upsert's commit must
-    leave the index either fully PRE-upsert (crash before the pending
-    marker exists — debris is discarded) or fully POST-upsert (marker
-    present — the verified stage is rolled forward), never part-old/
-    part-new, with all scratch dirs reaped; any indexed read repairs."""
+    leave the index either fully PRE-upsert (killed before the version is
+    claimed: a read ignores the unclaimed stage, and the next commit reaps
+    it) or fully POST-upsert (claimed: any indexed read rolls the verified
+    stage forward), never part-old/part-new."""
     from marie_ai_spark.operators import similarity as S
 
     path, batch = _ivf_fixture(spark, tmp_path, "idx")
@@ -524,93 +578,53 @@ def test_ivf_upsert_kill_mid_commit(spark, tmp_path, monkeypatch, crash):
     pre = _ivf_state(spark, path)
     assert pre != golden
 
-    real = S._rename_or_raise
-    calls = {"n": 0}
-
-    def boom(fs, src, dst):
-        calls["n"] += 1
-        # call 1 = the marker's tmp->final rename; later calls are the
-        # per-cell swap renames
-        if crash == "before_marker" and calls["n"] == 1:
-            raise RuntimeError("simulated kill before marker")
-        if crash == "mid_swap" and calls["n"] == 4:
-            raise RuntimeError("simulated kill mid swap")
-        real(fs, src, dst)
-
-    monkeypatch.setattr(S, "_rename_or_raise", boom)
-    if crash == "after_swaps":
-        def boom_manifest(*a, **k):
-            raise RuntimeError("simulated kill after swaps")
-        monkeypatch.setattr(S, "_rewrite_manifest", boom_manifest)
-    with pytest.raises(RuntimeError, match="simulated kill"):
+    step, nth = {"before_claim": ("_verify", 1), "mid_swap": ("_swap_in", 2),
+                 "before_done": ("_retire", 1)}[crash]
+    _kill_after(monkeypatch, step, nth)
+    with pytest.raises(_Kill):
         S.ivf_upsert(batch, path)
     monkeypatch.undo()
 
     # the crash left scratch state behind
-    debris = [
-        p.name for p in (tmp_path / "idx").iterdir()
-        if p.name.startswith(".upsert_")
-    ]
-    assert debris, "crash simulation must leave commit debris"
+    assert _commit_debris(path) or crash == "before_done"
 
     # restart: the indexed-read path repairs before serving
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = [float(x) for x in emb.filter(F.col("vec_id") == 1).first()["embedding"]]
     S.ivf_topk_indexed(spark, path, q, k=3, nprobe=4).collect()
     now = _ivf_state(spark, path)
-    if crash == "before_marker":
+    if crash == "before_claim":
         assert now == pre
+        assert _commit_debris(path), "a read never reaps an unclaimed stage"
     else:
         assert now == golden
-    assert not [
-        p.name for p in (tmp_path / "idx").iterdir()
-        if p.name.startswith(".upsert_")
-    ]
+        assert not _commit_debris(path)
 
     # re-running the identical upsert converges to the golden end state
     S.ivf_upsert(batch, path)
     assert _ivf_state(spark, path) == golden
-    assert not [
-        p.name for p in (tmp_path / "idx").iterdir()
-        if p.name.startswith(".upsert_")
-    ]
+    assert not _commit_debris(path)
 
 
-def test_ivf_recover_is_noop_under_live_lock(spark, tmp_path):
-    """ADVICE r7 (medium): recovery from the READ path must never delete
-    an in-flight writer's scratch state or race its swap. While a LIVE
-    process holds the commit lock, ivf_recover is a strict no-op; once
-    the lock is released (or its owner dies), the same debris is reaped
-    normally."""
-    import os
-
+def test_recover_never_touches_unclaimed_stage(spark, tmp_path):
+    """ADVICE r7/r8: recovery from the READ path must never delete an
+    in-flight writer's scratch state. A stage that no commit record
+    names (a writer still staging, or one that died before claiming)
+    survives every recover and indexed read; the next successful commit
+    reaps it, because a stage staged against an older version can never
+    commit."""
     from marie_ai_spark.operators import similarity as S
+    from marie_ai_spark.sources import commit
 
-    path, _batch = _ivf_fixture(spark, tmp_path, "idx")
-    # a healthy writer's pre-marker staging, with the writer alive (us)
-    assert S._try_acquire_upsert_lock(spark, path)
-    staging = tmp_path / "idx" / ".upsert_staging_feedc0de"
-    staging.mkdir()
-    assert S.ivf_recover(spark, path) is False
+    path, batch = _ivf_fixture(spark, tmp_path, "idx")
+    staging = tmp_path / "idx" / ".stage-0-feedc0de"
+    (staging / "cell=0").mkdir(parents=True)
+    (staging / "cell=0" / "part-0.parquet").write_bytes(b"in flight")
+    before = _ivf_state(spark, path)
+    assert commit.recover(spark, path) == 0
+    S.ivf_topk_indexed(spark, path, [0.0] * 64, k=3, nprobe=4).collect()
     assert staging.exists(), "reader recovery must not touch live staging"
-    # writer done: lock released, the orphan is reaped by the next recover
-    S._release_upsert_lock(spark, path)
-    assert S.ivf_recover(spark, path) is True
+    assert _ivf_state(spark, path) == before
+    S.ivf_upsert(batch, path)
     assert not staging.exists()
-    # a crashed writer's lock (dead pid) does not block recovery
-    staging.mkdir()
-    assert S._try_acquire_upsert_lock(spark, path)
-    import json
-
-    lock = tmp_path / "idx" / ".upsert_lock"
-    info = json.loads(lock.read_text())
-    info["pid"] = 2**22 + 12345  # beyond pid_max default: provably dead
-    lock.write_text(json.dumps(info))
-    # rewriting the file directly invalidates the Hadoop LocalFileSystem
-    # checksum sidecar; drop it so the recoverer can read the lock body
-    crc = tmp_path / "idx" / "..upsert_lock.crc"
-    if crc.exists():
-        crc.unlink()
-    assert S.ivf_recover(spark, path) is True
-    assert not staging.exists()
-    assert os.path.exists(path)
+    assert not _commit_debris(path)

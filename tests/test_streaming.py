@@ -533,10 +533,8 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
     them on streaming ingest (availableNow across two file waves) must be
     BIT-EQUAL to the batch result over the union — the same
     train-nothing/apply-on-ingest contract as the pretrained
-    classifiers. hash_project reads d from the vectors each task sees,
-    so a stream needs no dimensionality argument; binarize_embeddings
-    takes dim explicitly on streams (a streaming plan cannot run its
-    one-row dimensionality probe)."""
+    classifiers. hash_project and binarize_embeddings read d from the
+    vectors themselves, so a stream needs no dimensionality argument."""
     from marie_ai_spark.operators.similarity import (
         binarize_embeddings,
         hash_project,
@@ -546,7 +544,6 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).select("vec_id", "embedding")
-    d = len(emb.first()["embedding"])
 
     want_q = {
         (r.vec_id, r.scale, tuple(r.qembedding))
@@ -579,7 +576,7 @@ def test_streaming_embedding_compression_matches_batch(spark, tmp_path):
             (f"proj{o}_stream", hash_project(src, out_dim=o, seed=1))
             for o in out_dims
         ),
-        ("bits_stream", binarize_embeddings(src, dim=d)),
+        ("bits_stream", binarize_embeddings(src)),
     ):
         q = (
             df.writeStream.format("memory")
