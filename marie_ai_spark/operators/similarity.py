@@ -8,6 +8,8 @@ plan joins on bucket instead of cross-joining all vectors.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -533,26 +535,28 @@ def semantic_dedup(
     )
 
 
+def _write_cells(cells: DataFrame, centroids: list[list[float]],
+                 path: str) -> None:
+    """Write cell-assigned rows as a cell-partitioned parquet table, with
+    the quantizer persisted next to it as metadata. Repartitioning by cell
+    first (guide §6) gives one file per cell directory instead of
+    (#tasks x #cells) small files, each of which taxes every later probe
+    and upsert."""
+    cells.repartition("cell").write.mode("overwrite").partitionBy(
+        "cell").parquet(path)
+    local_df_1p(
+        cells.sparkSession, [(json.dumps(centroids),)],
+        "centroids_json string"
+    ).write.mode("overwrite").parquet(path + "_quantizer")
+
+
 def ivf_write_index(
     embeddings: DataFrame, centroids: list[list[float]], path: str
 ) -> None:
     """Materialize the IVF index as a cell-partitioned parquet table — the
     100 TB layout: probes then touch only the nprobe nearest cells'
-    partitions (directory-level pruning, no full scan). The quantizer
-    itself is metadata; persist it next to the data."""
-    import json
-
-    # repartition by cell before the partitioned write (guide §6): one
-    # file per cell directory instead of (#tasks x #cells) small files —
-    # the parallel Arrow assignment otherwise fans every task into every
-    # cell dir, and each extra file taxes every later probe and upsert
-    ivf_assign(embeddings, centroids).repartition("cell").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
-    spark = embeddings.sparkSession
-    local_df_1p(
-        spark, [(json.dumps(centroids),)], "centroids_json string"
-    ).write.mode("overwrite").parquet(path + "_quantizer")
+    partitions (directory-level pruning, no full scan)."""
+    _write_cells(ivf_assign(embeddings, centroids), centroids, path)
 
 
 def ivf_write_index_int8(
@@ -562,19 +566,10 @@ def ivf_write_index_int8(
     partitioned by cell — the 4x-smaller copy a 100 TB deployment keeps
     hot while the float originals stay on cold storage for re-rank.
     Cell assignment happens on the FLOAT vectors (same cells as the
-    float index, so probes agree); only the payload is compressed.
-    Quantizer metadata persists alongside, like ivf_write_index."""
-    import json
-
-    quantize_int8(ivf_assign(embeddings, centroids)).drop(
-        "embedding"
-    ).repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
-    spark = embeddings.sparkSession
-    local_df_1p(
-        spark, [(json.dumps(centroids),)], "centroids_json string"
-    ).write.mode("overwrite").parquet(path + "_quantizer")
+    float index, so probes agree); only the payload is compressed."""
+    _write_cells(
+        quantize_int8(ivf_assign(embeddings, centroids)).drop("embedding"),
+        centroids, path)
 
 
 def ivf_topk_int8_indexed(
@@ -717,8 +712,6 @@ def ann_recall_at_k(
 
 
 def ivf_read_quantizer(spark, path: str) -> list[list[float]]:
-    import json
-
     return json.loads(
         spark.read.parquet(path + "_quantizer").first()["centroids_json"]
     )

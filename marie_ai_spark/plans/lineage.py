@@ -18,8 +18,7 @@ buckets atomically on a real cluster; the IO layer is isolated here so the
 parquet fallback and an Iceberg catalog are interchangeable).
 
 Checksum is order-independent (`sum(xxhash64(conv_id, turn_idx))` per
-bucket) so it is stable under any task/partition order at any scale;
-`compacted` rows carry the commit's all-column checksum instead.
+bucket) so it is stable under any task/partition order at any scale.
 """
 
 from __future__ import annotations
@@ -88,24 +87,9 @@ def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:
     concurrent-writer test."""
     if not rows:
         return
-    df = local_df_1p(
-        spark,
-        [
-            (
-                r["run_id"],
-                r["partition_id"],
-                r["status"],
-                r["rows_in"],
-                r["rows_out"],
-                r["checksum"],
-                r["started_at"],
-                r["completed_at"],
-                r["attempt"],
-            )
-            for r in rows
-        ],
-        LINEAGE_SCHEMA,
-    )
+    cols = [c.split()[0] for c in LINEAGE_SCHEMA.split(", ")]
+    df = local_df_1p(spark, [tuple(r[c] for c in cols) for r in rows],
+                     LINEAGE_SCHEMA)
     tag = uuid.uuid4().hex
     stage = f"{path}__stage_{tag}"
     df.write.mode("overwrite").parquet(stage)

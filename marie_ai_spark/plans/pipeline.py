@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_transcripts
@@ -194,9 +194,9 @@ def compact_extracted(
     their mean row size: the rewrite is staged and verified before any
     live bucket moves (a mismatch raises with the live table untouched),
     and a crash after the claim is rolled forward by the next reader.
-    A 'compacted' lineage row per bucket records its rows and the
-    commit's all-column checksum. Returns {run_id, buckets_compacted,
-    files_before, files_after}.
+    A 'compacted' lineage row per bucket records its rows and checksum,
+    which the commit's verification shows the rewrite kept. Returns
+    {run_id, buckets_compacted, files_before, files_after}.
     """
     run_id = run_id or f"compact-{new_run_id()}"
     extracted_path = f"{out_dir}/extracted"
@@ -222,8 +222,10 @@ def compact_extracted(
         # bin-pack by bytes: cap records-per-file at ~target_file_bytes of
         # the victims' mean row size
         bytes_before = sum(sum(sizes) for sizes in small.values())
-        avg_row = max(1, bytes_before // (current.count() or 1))
-        res = c.replace_partitions(
+        metrics = partition_metrics(current).collect()
+        rows = sum(m["rows_out"] for m in metrics)
+        avg_row = max(1, bytes_before // (rows or 1))
+        c.replace_partitions(
             current.repartition(len(victims), "_bucket")
             .sortWithinPartitions("conv_id", "turn_idx"),
             "_bucket",
@@ -238,16 +240,16 @@ def compact_extracted(
         [
             {
                 "run_id": run_id,
-                "partition_id": int(b),
+                "partition_id": int(m["_bucket"]),
                 "status": "compacted",
-                "rows_in": rows,
-                "rows_out": rows,
-                "checksum": str(checksum),
+                "rows_in": int(m["rows_out"]),
+                "rows_out": int(m["rows_out"]),
+                "checksum": m["checksum"],
                 "started_at": started,
                 "completed_at": completed,
                 "attempt": 1,
             }
-            for b, (rows, checksum) in sorted(res["partitions"].items())
+            for m in metrics
         ],
     )
     return {
@@ -280,9 +282,14 @@ def merge_extracted(
     extracted_path = f"{out_dir}/extracted"
     upd = updates.withColumn("_bucket", bucket_col(n_buckets))
     with commit.Commit(spark, extracted_path) as c:
-        touched = [
-            r["_bucket"] for r in upd.select("_bucket").distinct().collect()
-        ]
+        # the touched buckets in one job with no shuffle: an observed
+        # collect_set over a no-op write (distinct().collect() takes two
+        # jobs under AQE)
+        seen = Observation()
+        upd.select("_bucket").observe(
+            seen, F.collect_set("_bucket").alias("b")
+        ).write.format("noop").mode("overwrite").save()
+        touched = seen.get["b"]
         existing = spark.read.parquet(extracted_path).filter(
             F.col("_bucket").isin(touched)
         )

@@ -11,27 +11,34 @@ writer that loses the race raises `CommitConflict`; no lock, no lease).
 version, rolled forward first; 0 when new):
 
   1. stage   Spark writes the new partitions to `.stage-<b>-<uuid>/`; an
-             `Observation` on that write records each partition's rows
-             and sum(xxhash64(every column)) as decimal(38,0).
+             `Observation` on that write records its rows and
+             sum(xxhash64(every column)) as decimal(38,0).
   2. verify  the stage is read back and must match the observation, or
              it is deleted and the call raises, the live table untouched.
-  3. claim   `.commits/<b+1>.json` (stage, replaced and emptied
-             partitions) is created if absent; if it exists the stage is
-             deleted and `CommitConflict` raised (rerun to retry).
+  3. claim   `.commits/<b+1>.json` (stage; replaced, added and emptied
+             partitions) is created if absent; if it exists, or a newer
+             version does, the stage is deleted and `CommitConflict`
+             raised (rerun to retry).
   4. swap    each replaced live partition moves into the stage's
-             `.trash/` and the staged one moves live; each emptied
+             `.trash/` and the staged one moves live; an added one (no
+             live directory at the claim) only moves live; each emptied
              partition moves into `.trash/`.
   5. retire  the stage is renamed to `.trash-<v>` and deleted,
-             `.commits/<v>.done` written, and stages staged against an
-             older version (they can never commit) reaped.
+             `.commits/<v>.done` written, and older commit records and
+             stages staged against an older version (they can never
+             commit) deleted.
 
 Every rename refuses an existing target and a missing parent, and every
 swap step re-checks state, so the writer and any reader can roll one
 version forward at once: a late rename finds its source gone, its target
-taken or (the stage retired) its parent gone, and moves nothing. Readers
+taken or (the stage retired) its parent gone, and moves nothing. An added
+partition is never moved to trash, as no earlier move fills its trash
+target: a late actor would take the partition just swapped in. Readers
 call `recover`, which rolls forward a claimed version with no `.done`;
 they never delete a stage no claim names. Only the latest version can
-lack `.done`, as a writer recovers before it stages. All metadata names
+lack `.done`, as a writer recovers before it stages, so only the latest
+record is kept; a writer so stale that its version's record was pruned
+finds a newer one right after its claim and stops. All metadata names
 start with `.`, which every reader of the table skips.
 
 The claim's create-if-absent, per filesystem:
@@ -133,14 +140,6 @@ class _Fs:
         finally:
             out.close()
 
-    def sizes(self, d: str) -> list[int]:
-        return [
-            st.getLen()
-            for st in self._fs.listStatus(self._P(d))
-            if st.isFile()
-            and not st.getPath().getName().startswith(("_", "."))
-        ]
-
     def rename(self, src: str, dst: str) -> None:
         """Move `src` to `dst`; raise if `dst` exists or its parent does
         not."""
@@ -193,7 +192,13 @@ def recover(spark: SparkSession, table: str) -> int:
 def _recover(fs) -> int:
     v, done = _latest(fs)
     if not done:
-        record = json.loads(fs.read(f"{fs.root}/{COMMITS}/{v}.json"))
+        path = f"{fs.root}/{COMMITS}/{v}.json"
+        try:
+            record = json.loads(fs.read(path))
+        except _MOVE_ERRORS:
+            if fs.exists(path):
+                raise
+            return _recover(fs)  # pruned: a newer commit rolled v forward
         _roll_forward(fs, v, record)
     return v
 
@@ -204,20 +209,23 @@ def _roll_forward(fs, v: int, record: dict) -> None:
     for part in record["replaced"]:
         _swap_in(fs, f"{stage}/{part}", f"{root}/{part}",
                  f"{stage}/.trash/{part}")
+    for part in record["added"]:
+        _swap_in(fs, f"{stage}/{part}", f"{root}/{part}", None)
     for part in record["emptied"]:
         _move_out(fs, f"{root}/{part}", f"{stage}/.trash")
     _retire(fs, stage, f"{root}/.trash-{v}")
     fs.write(f"{root}/{COMMITS}/{v}.done", "")
 
 
-def _swap_in(fs, staged: str, live: str, trashed: str) -> None:
-    """Move the live partition to trash and the staged one live. A staged
-    partition that is gone was swapped in (here or by another actor)."""
+def _swap_in(fs, staged: str, live: str, trashed: str | None) -> None:
+    """Move the live partition to `trashed` (None: the partition is added,
+    nothing live to move) and the staged one live. A staged partition
+    that is gone was swapped in (here or by another actor)."""
     for _ in range(5):  # past a few lost races, it is a real error
         if not fs.exists(staged):
             return
         try:
-            if fs.exists(live):
+            if trashed and fs.exists(live):
                 fs.rename(live, trashed)
             fs.rename(staged, live)
             return
@@ -250,65 +258,62 @@ def _retire(fs, stage: str, retired: str) -> None:
     fs.delete(retired)
 
 
-def _observe(df: DataFrame, partition_col: str, partitions: list):
-    """(df with an Observation attached, the Observation): total rows, and
-    rows plus sum(xxhash64(every column)) as decimal(38,0) per listed
-    partition. One pass, no shuffle; independent of row order."""
-    h = F.xxhash64(*[F.col(c) for c in df.columns]).cast("decimal(38,0)")
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    for i, p in enumerate(partitions):
-        hit = F.col(partition_col) == F.lit(p)
-        aggs += [F.count_if(hit).alias(f"r{i}"),
-                 F.sum(F.when(hit, h)).alias(f"c{i}")]
+def _observe(df: DataFrame):
+    """(df with an Observation attached, the Observation): rows and
+    sum(xxhash64(every column, in name order)) as decimal(38,0). One
+    pass, no shuffle, independent of row and column order; the partition
+    column is hashed too, so a row that lands in another partition
+    changes the sum."""
+    cols = ", ".join(f"`{c}`" for c in sorted(df.columns))
     obs = Observation()
-    return df.observe(obs, *aggs), obs
+    return df.observe(obs, F.count(F.lit(1)).alias("rows"), F.expr(
+        f"coalesce(sum(cast(xxhash64({cols}) as decimal(38,0))), 0)"
+    ).alias("checksum")), obs
 
 
-def _stats(observed: dict, partitions: list) -> dict:
-    return {p: (observed[f"r{i}"], observed[f"c{i}"] or 0)
-            for i, p in enumerate(partitions)}
-
-
-def _stage(df: DataFrame, stage: str, partition_col: str, partitions: list,
-           max_records_per_file: int | None) -> dict:
-    """Write the stage; {partition: (rows, checksum)} the write observed."""
-    observed_df, obs = _observe(df, partition_col, partitions)
-    writer = observed_df.write.mode("overwrite").partitionBy(partition_col)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(stage)
-    stats = _stats(obs.get, partitions)
-    if obs.get["rows"] != sum(n for n, _ in stats.values()):
-        raise ValueError(f"rows outside the partitions {partitions}")
-    return stats
+def _stage(df: DataFrame, stage: str, partition_col: str,
+           max_records_per_file: int) -> dict:
+    """Write the stage (0 rows per file: no cap); {rows, checksum} the
+    write observed."""
+    observed_df, obs = _observe(df)
+    observed_df.write.mode("overwrite").partitionBy(partition_col).option(
+        "maxRecordsPerFile", max_records_per_file).parquet(stage)
+    return obs.get
 
 
 def _verify(spark: SparkSession, stage: str, df: DataFrame,
-            partition_col: str, written: dict) -> None:
+            written: dict) -> None:
     """Read the stage back from disk (one pass into a no-op sink) and
-    require the per-partition rows and checksums the write observed."""
-    back = spark.read.schema(df.schema).parquet(stage).select(*df.columns)
-    observed_back, obs = _observe(back, partition_col, list(written))
+    require the rows and checksum the write observed."""
+    observed_back, obs = _observe(
+        spark.read.schema(df.schema).parquet(stage))
     observed_back.write.format("noop").mode("overwrite").save()
-    on_disk = _stats(obs.get, list(written))
-    if on_disk != written or obs.get["rows"] != sum(
-            n for n, _ in written.values()):
+    if obs.get != written:
         raise RuntimeError(
-            f"staged write does not match what was written: {on_disk} on "
+            f"staged write does not match what was written: {obs.get} on "
             f"disk vs {written}; live table left untouched")
 
 
 def _claim(fs, v: int, record: dict) -> None:
+    path = f"{fs.root}/{COMMITS}/{v}.json"
     fs.mkdirs(f"{fs.root}/{COMMITS}")
     try:
-        fs.create(f"{fs.root}/{COMMITS}/{v}.json", json.dumps(record))
+        fs.create(path, json.dumps(record))
     except FileExistsError:
         raise _conflict(fs.root, v) from None
+    if _latest(fs)[0] != v:  # v's record had been pruned: a stale write
+        fs.delete(path)
+        raise _conflict(fs.root, v)
 
 
 def _reap(fs, v: int) -> None:
-    """Delete stages staged against a version before `v` (they can never
-    commit) and retired stages whose delete was cut short."""
+    """Delete the commit records before `v`, stages staged against a
+    version before `v` (they can never commit) and retired stages whose
+    delete was cut short."""
+    for name in fs.names(f"{fs.root}/{COMMITS}"):
+        n = name.split(".")[0]
+        if n.isdigit() and int(n) < v:
+            fs.delete(f"{fs.root}/{COMMITS}/{name}")
     for name in fs.names(fs.root):
         if name.startswith((".stage-", ".trash-")):
             base = name.split("-")[1]
@@ -333,39 +338,40 @@ class Commit:
         return self
 
     def __exit__(self, kind, exc, tb) -> bool:
-        v, root = self.base + 1, self.fs.root
         if (isinstance(exc, Exception)
                 and not isinstance(exc, CommitConflict)
                 and self.version is None
-                and self.fs.exists(f"{root}/{COMMITS}/{v}.json")):
-            raise _conflict(root, v) from exc
+                and _latest(self.fs)[0] > self.base):
+            raise _conflict(self.fs.root, self.base + 1) from exc
         return False
 
     def replace_partitions(self, df: DataFrame, partition_col: str,
                            partitions: list,
-                           max_records_per_file: int | None = None) -> dict:
+                           max_records_per_file: int = 0) -> dict:
         """Replace the listed partitions of the table with df's rows, as
         one commit (steps in the module docstring): a listed partition df
         holds no rows for is removed, and a row outside the list fails
         the call. `df` may read the table: no live partition moves until
         the stage is verified and claimed. Partition values are ints or
-        strings Hive need not escape. Returns {version, partitions:
-        {value: (rows, checksum)} of the non-empty ones, emptied}."""
+        strings Hive need not escape. Returns {version, rows, checksum,
+        partitions: the non-empty listed values, emptied: the others}."""
         fs, root = self.fs, self.fs.root
         v = self.base + 1
         stage_name = f".stage-{self.base}-{uuid.uuid4().hex}"
         stage = f"{root}/{stage_name}"
-        partitions = sorted(set(partitions))
+        listed = {f"{partition_col}={p}": p for p in set(partitions)}
         try:
-            stats = _stage(df, stage, partition_col, partitions,
-                           max_records_per_file)
-            _verify(self.spark, stage, df, partition_col, stats)
-            kept = {p: st for p, st in stats.items() if st[0]}
-            gone = [p for p in partitions if p not in kept]
+            written = _stage(df, stage, partition_col, max_records_per_file)
+            _verify(self.spark, stage, df, written)
+            staged = {n for n in fs.names(stage) if "=" in n}
+            if staged - listed.keys():
+                raise ValueError(f"rows outside the partitions {partitions}")
+            live = set(fs.names(root))
             record = {
                 "stage": stage_name,
-                "replaced": [f"{partition_col}={p}" for p in kept],
-                "emptied": [f"{partition_col}={p}" for p in gone],
+                "replaced": sorted(staged & live),
+                "added": sorted(staged - live),
+                "emptied": sorted(live & listed.keys() - staged),
             }
             fs.mkdirs(f"{stage}/.trash")
             _claim(fs, v, record)
@@ -375,14 +381,19 @@ class Commit:
         self.version = v
         _roll_forward(fs, v, record)
         _reap(fs, v)
-        return {"version": v, "partitions": kept, "emptied": gone}
+        return {**written, "version": v,
+                "partitions": sorted(listed[n] for n in staged),
+                "emptied": sorted(listed[n] for n in listed.keys() - staged)}
 
 
 def partition_files(spark: SparkSession, table: str) -> dict[str, list]:
     """{partition dir name: [bytes of each data file]} of `table`."""
     fs = _Fs(spark, table)
     return {
-        name: fs.sizes(f"{fs.root}/{name}")
+        name: [st.getLen()
+               for st in fs._fs.listStatus(fs._P(f"{fs.root}/{name}"))
+               if st.isFile()
+               and not st.getPath().getName().startswith(("_", "."))]
         for name in fs.names(fs.root)
         if "=" in name and not name.startswith(".")
     }

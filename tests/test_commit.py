@@ -325,3 +325,76 @@ def test_hadoop_filesystem_path_rolls_forward(
     monkeypatch.setattr(commit, "_swap_in", real_swap)
     assert same("merge", op.read(), states["merge"][1])
     assert debris(op.table) == []
+
+
+def small_table(spark, path, rows):
+    """A table of (k, p) rows partitioned by p."""
+    spark.createDataFrame(rows, "k int, p int").write.partitionBy(
+        "p").parquet(path)
+
+
+def rows_of(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_concurrent_roll_forward_keeps_an_added_partition(
+    spark, tmp_path, monkeypatch
+):
+    """A writer and a reader roll one version forward at once. The version
+    replaces p=1 and adds p=2 (no live directory at the claim). The reader
+    sees p=2 staged, the writer swaps it live, then the reader goes on: it
+    must not move the partition just swapped in to trash, where the
+    stage's retirement would delete it."""
+    table = str(tmp_path / "t")
+    small_table(spark, table, [(1, 1)])
+    inject(monkeypatch, "after_claim")
+    with pytest.raises(Kill):
+        with commit.Commit(spark, table) as c:
+            c.replace_partitions(
+                spark.createDataFrame([(10, 1), (20, 2)], "k int, p int"),
+                "p", [1, 2])
+    monkeypatch.undo()
+
+    real_exists, real_swap = commit._Fs.exists, commit._swap_in
+    raced = []
+
+    def exists(self, p):
+        out = real_exists(self, p)
+        if p.endswith("/p=2") and ".stage-" in p and not raced:
+            raced.append(p)  # the writer's swap lands right after the look
+            real_swap(self, p, f"{self.root}/p=2", None)
+        return out
+
+    monkeypatch.setattr(commit._Fs, "exists", exists)
+    assert commit.recover(spark, table) == 1
+    monkeypatch.undo()
+    assert raced
+    assert rows_of(spark, table) == [(10, 1), (20, 2)]
+    assert debris(table) == []
+
+
+def test_commit_records_are_pruned_and_a_stale_writer_conflicts(
+    spark, tmp_path
+):
+    """Each commit keeps only its own record in `.commits/`. A writer
+    opened before two later commits finds its version's record pruned,
+    claims it anyway, sees the newer version and raises CommitConflict
+    with no debris and the table as the later commits left it."""
+    table = str(tmp_path / "t")
+    small_table(spark, table, [(1, 1), (2, 2)])
+    stale = commit.Commit(spark, table)
+    for v, k in ((1, 11), (2, 12)):
+        with commit.Commit(spark, table) as c:
+            res = c.replace_partitions(
+                spark.createDataFrame([(k, 1)], "k int, p int"), "p", [1])
+        assert res["version"] == v
+        assert sorted(os.listdir(f"{table}/{commit.COMMITS}")) == [
+            f"{v}.done", f"{v}.json"]
+    with pytest.raises(commit.CommitConflict):
+        with stale as c:
+            c.replace_partitions(
+                spark.createDataFrame([(99, 2)], "k int, p int"), "p", [2])
+    assert rows_of(spark, table) == [(2, 2), (12, 1)]
+    assert debris(table) == []
+    assert sorted(os.listdir(f"{table}/{commit.COMMITS}")) == [
+        "2.done", "2.json"]
