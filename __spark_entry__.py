@@ -381,7 +381,8 @@ def q_bm25_stream_scores(spark, sf):
     (N, avgdl, per-term df) as model state; bm25_score_stream scores each
     document with pure per-row expressions — the same code path runs on
     an unbounded stream (availableNow parity in tests/test_streaming.py).
-    Returns every matched doc's score, bit-equal to bm25_topk's fold."""
+    Returns every matched doc's score; bm25_topk is the same train + apply
+    cut to its top k."""
     docs = _t(spark, sf, "documents")
     stats = textstats.bm25_train_stats(
         docs, ["spark", "merge", "window", "customer"]
@@ -528,13 +529,14 @@ def q_lang_id_pretrained(spark, sf):
 
 def q_fluency_pretrained(spark, sf):
     """Train/apply split of the CCNet-style fluency proxy: pretrained
-    (lang, trigram) profile + the stateless dictionary apply
+    (lang, g, rank) trigram profile (the lang-ID trainer at top_k 200) +
+    the stateless dictionary apply
     (fluency_classify_stream). Output identical to q_fluency, so it
     shares that oracle."""
     docs = _t(spark, sf, "documents")
     rows = [
         r.asDict()
-        for r in textstats.fluency_profile_table(docs, top_k=200).collect()
+        for r in textstats.lang_profile_table(docs, top_k=200).collect()
     ]
     return textstats.fluency_classify_stream(docs, rows)
 
@@ -2872,13 +2874,37 @@ def oracle_sql() -> dict[str, str]:
         WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
               % 1000000 < r.rate * 1000000
     """
+    # Spark's percentile, step by step: position p = (n - 1) * q over the
+    # ascending values; equal neighbours at floor(p) and ceil(p) return
+    # that value, unequal ones interpolate (ceil - p) * lo + (p - floor)
+    # * hi. quantile_cont's form lands one ulp above an equal pair.
     sqls["q_fluency_buckets"] = f"""
         WITH scored AS ({sqls["q_fluency"]}),
+        ranked AS (
+            SELECT lang, in_profile_frac AS v,
+                   row_number() OVER (PARTITION BY lang
+                                      ORDER BY in_profile_frac) - 1 AS i,
+                   count(*) OVER (PARTITION BY lang) AS n
+            FROM scored
+        ),
+        pos AS (
+            SELECT DISTINCT lang, q, CAST(n - 1 AS DOUBLE) * q AS p
+            FROM ranked, (VALUES (0.33::DOUBLE), (0.67::DOUBLE)) qs(q)
+        ),
+        interp AS (
+            SELECT p.lang, p.q,
+                   CASE WHEN lo.v = hi.v THEN lo.v
+                        ELSE (ceil(p.p) - p.p) * lo.v
+                             + (p.p - floor(p.p)) * hi.v END AS c
+            FROM pos p
+            JOIN ranked lo ON lo.lang = p.lang AND lo.i = floor(p.p)
+            JOIN ranked hi ON hi.lang = p.lang AND hi.i = ceil(p.p)
+        ),
         cuts AS (
             SELECT lang,
-                   quantile_cont(in_profile_frac, 0.33) AS c_lo,
-                   quantile_cont(in_profile_frac, 0.67) AS c_hi
-            FROM scored GROUP BY lang
+                   max(c) FILTER (WHERE q = 0.33) AS c_lo,
+                   max(c) FILTER (WHERE q = 0.67) AS c_hi
+            FROM interp GROUP BY lang
         )
         SELECT s.doc_id, s.lang, s.in_profile_frac,
                CASE WHEN s.in_profile_frac >= c.c_hi THEN 'head'

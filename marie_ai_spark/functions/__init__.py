@@ -13,7 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def spread_input(df, key_col: str | None = None, min_parts: int | None = None):
+def spread_input(df, key_col: str | None = None):
     """Give a CPU-heavy narrow stage at least the cluster's default
     parallelism (guide §2.5, input skew): a small input arrives as a
     handful of scan splits — a one-row-group parquet file is ONE task —
@@ -29,7 +29,7 @@ def spread_input(df, key_col: str | None = None, min_parts: int | None = None):
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     if key_col is not None:

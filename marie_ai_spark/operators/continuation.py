@@ -42,7 +42,7 @@ from ..ref_ops import (
     extract_turn_stateful,
     turn_events_for_text,
 )
-from .extract import EXTRACTED_SCHEMA
+from .extract import EXTRACTED_SCHEMA, extracted_frame
 
 _EVENTS_SCHEMA = "conv_id string, turn_idx int, events string"
 _ENTRY_SCHEMA = "conv_id string, turn_idx int, entry_open array<string>"
@@ -120,26 +120,7 @@ def _stateful_extract(rules, pdf_mode):
                 entry_open = frozenset(entry) if entry is not None else frozenset()
                 r, _exit = extract_turn_stateful(text, rules, entry_open, pdf_mode)
                 results.append(r)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].values,
-                    "turn_idx": pdf["turn_idx"].astype("int32").values,
-                    "role": pdf["role"].values,
-                    "ts": pdf["ts"].values,
-                    "doc_kind": [r["doc_kind"] for r in results],
-                    "clean_text": [r["clean_text"] for r in results],
-                    "spans": [
-                        [
-                            {"start": s, "end": e, "label": lb, "action": ac}
-                            for (s, e, lb, ac) in r["spans"]
-                        ]
-                        for r in results
-                    ],
-                    "n_lines": pd.Series(
-                        [r["n_lines"] for r in results], dtype="int32"
-                    ),
-                }
-            )
+            yield extracted_frame(pdf, results)
 
     return fn
 

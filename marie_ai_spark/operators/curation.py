@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import tokens
+from ..functions import shingles_of_tokens, tokens
 
 # fixed application order; no lookaround so every regex engine agrees
 PII_RULES = [
@@ -110,16 +110,9 @@ def contaminated_docs(
         toks = df.select(
             F.col(src_col).alias(out_name), tokens("text").alias("w")
         )
-        grams = F.when(
-            F.size("w") >= n,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - (n - 1)),
-                    lambda i: F.concat_ws(" ", F.slice("w", i, n)),
-                )
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        return toks.select(out_name, F.explode(grams).alias("gram"))
+        return toks.select(
+            out_name, F.explode(shingles_of_tokens("w", n)).alias("gram")
+        )
 
     doc_grams = sh(documents, id_col, "_doc")
     bench_grams = sh(benchmark, bench_id_col, "_bench")
@@ -147,17 +140,8 @@ def benchmark_shingles(
     benchmark too big to pin per-task raises instead of flooding the
     driver — use contaminated_docs' broadcast join for those."""
     toks = benchmark.select(tokens(text_col).alias("w"))
-    grams = F.when(
-        F.size("w") >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size("w") - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice("w", i, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     rows = (
-        toks.select(F.explode(grams).alias("gram"))
+        toks.select(F.explode(shingles_of_tokens("w", n)).alias("gram"))
         .distinct()
         .limit(max_shingles + 1)
         .collect()

@@ -32,31 +32,37 @@ EXTRACTED_SCHEMA = (
 )
 
 
+def extracted_frame(pdf: pd.DataFrame, results: list) -> pd.DataFrame:
+    """The EXTRACTED_SCHEMA batch for input batch `pdf` and its per-turn
+    extraction results (ref_ops dicts, one per row, in row order)."""
+    return pd.DataFrame(
+        {
+            "conv_id": pdf["conv_id"].values,
+            "turn_idx": pdf["turn_idx"].astype("int32").values,
+            "role": pdf["role"].values,
+            "ts": pdf["ts"].values,
+            "doc_kind": [r["doc_kind"] for r in results],
+            "clean_text": [r["clean_text"] for r in results],
+            "spans": [
+                [
+                    {"start": s, "end": e, "label": lb, "action": ac}
+                    for (s, e, lb, ac) in r["spans"]
+                ]
+                for r in results
+            ],
+            "n_lines": pd.Series(
+                [r["n_lines"] for r in results], dtype="int32"
+            ),
+        }
+    )
+
+
 def _extract_batches(rules, pdf_mode="compact"):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            results = [extract_turn(t, rules, pdf_mode) for t in pdf["text"]]
-            out = pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].values,
-                    "turn_idx": pdf["turn_idx"].astype("int32").values,
-                    "role": pdf["role"].values,
-                    "ts": pdf["ts"].values,
-                    "doc_kind": [r["doc_kind"] for r in results],
-                    "clean_text": [r["clean_text"] for r in results],
-                    "spans": [
-                        [
-                            {"start": s, "end": e, "label": lb, "action": ac}
-                            for (s, e, lb, ac) in r["spans"]
-                        ]
-                        for r in results
-                    ],
-                    "n_lines": pd.Series(
-                        [r["n_lines"] for r in results], dtype="int32"
-                    ),
-                }
+            yield extracted_frame(
+                pdf, [extract_turn(t, rules, pdf_mode) for t in pdf["text"]]
             )
-            yield out
 
     return fn
 

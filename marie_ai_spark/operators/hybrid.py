@@ -243,13 +243,12 @@ def hybrid_annotate(
     transcripts: DataFrame,
     labels: list[str] | None = None,
     critical: list[str] | None = None,
-    dedup: bool = True,
     max_broadcast_decisions: int = 2_000_000,
 ) -> DataFrame:
     """(conv_id, label, strategy, value, turn_idx, line_no, tok_start,
-    ngram_size, score). With dedup=True, one highest-confidence row per
-    (conv_id, label). The decision pass (`decision_plan`: one read of the
-    candidate fan-out, scored once per distinct norm) runs eagerly at call
+    ngram_size, score): one highest-confidence row per (conv_id, label).
+    The decision pass (`decision_plan`: one read of the candidate
+    fan-out, scored once per distinct norm) runs eagerly at call
     time into a localCheckpoint; the returned plan is the join-back of
     those decisions onto the fan-out plus the dedup window. See the module
     docstring for the fan-out lifecycle and the bounded broadcast gate."""
@@ -288,8 +287,6 @@ def hybrid_annotate(
         LAST_CALL_INFO["join"] = "shuffle"
     LAST_CALL_INFO["n_decisions"] = n_dec
     out = out.select(*_CAND_KEY, "value", "label", "strategy", "score")
-    if not dedup:
-        return out.select(*_OUT_COLS)
     wd = Window.partitionBy("conv_id", "label").orderBy(
         F.desc("score"), "turn_idx", "line_no", "tok_start", "ngram_size"
     )

@@ -96,11 +96,11 @@ def conversation_text(
     )
 
 
-def conversation_stats(extracted: DataFrame, salt_buckets: int = DEFAULT_SALT) -> DataFrame:
+def conversation_stats(extracted: DataFrame) -> DataFrame:
     """Document-level rollup: per conv_id turn/line/char counts and per-kind
     turn counts, salted two-phase."""
     salted = extracted.withColumn(
-        "_salt", F.pmod(F.col("turn_idx"), F.lit(salt_buckets))
+        "_salt", F.pmod(F.col("turn_idx"), F.lit(DEFAULT_SALT))
     )
     partial = salted.groupBy("conv_id", "_salt").agg(
         F.count(F.lit(1)).alias("p_turns"),

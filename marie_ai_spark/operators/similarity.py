@@ -10,12 +10,16 @@ from __future__ import annotations
 
 import json
 
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cosine
-from ..session import local_df_1p
 from ..sources import commit
+
+# fixed-point grid of train_kmeans_full's re-centering sums
+KMEANS_QUANT = 1e6
 
 
 def brute_force_topk(
@@ -91,7 +95,6 @@ def cosine_neardup_pairs_arrow(
     Output is (vec_a < vec_b, cos_sim), bounded by the above-threshold
     pairs."""
     import numpy as np
-    import pandas as pd
 
     margin = float(threshold) - 1e-3
 
@@ -204,7 +207,6 @@ def train_kmeans_full(
     embeddings: DataFrame,
     n_centroids: int = 8,
     iters: int = 2,
-    quant: float = 1e6,
 ) -> list[list[float]]:
     """Distributed Lloyd's k-means over the FULL corpus — the scale path
     past the driver-sampled quantizer (train_ivf_centroids trains on a
@@ -217,10 +219,11 @@ def train_kmeans_full(
     corpus size; driver state is k*d sums — index metadata.
 
     Determinism (and hence oracle-checkability): float sums depend on
-    partition layout, so re-centering FLOORS each coordinate to a 1/quant
-    grid and sums int64s — exact, associative, order-independent. The
-    trained centroids are bit-identical across any repartitioning (tested)
-    and reproducible in SQL as sum(floor(x*quant))::DOUBLE / n / quant.
+    partition layout, so re-centering FLOORS each coordinate to a
+    1/KMEANS_QUANT grid and sums int64s — exact, associative,
+    order-independent. The trained centroids are bit-identical across
+    any repartitioning (tested) and reproducible in SQL as
+    sum(floor(x*1e6))::DOUBLE / n / 1e6.
     The sums ride a decimal accumulator (ANSI-safe at any row count); the
     1e-6 coordinate quantization is far below embedding noise.
 
@@ -242,7 +245,7 @@ def train_kmeans_full(
     k = len(cent)
     dim = len(cent[0])
     v = F.col("embedding").cast("array<double>")
-    qlit = F.lit(float(quant))
+    qlit = F.lit(KMEANS_QUANT)
     for _ in range(iters):
         assigned = _assign_arrow(embeddings.select(v.alias("v")), cent, "v")
         rows = (
@@ -261,7 +264,7 @@ def train_kmeans_full(
         got = {r.cell: r for r in rows}
         cent = [
             [
-                (float(int(got[c][f"s{d}"])) / got[c].n) / quant
+                (float(int(got[c][f"s{d}"])) / got[c].n) / KMEANS_QUANT
                 for d in range(dim)
             ]
             if c in got
@@ -429,7 +432,6 @@ def _assign_arrow(
     float32 -> float64 widening is exact, and np.argmin takes the FIRST
     minimum, so ties go to the lowest cell id."""
     import numpy as np
-    import pandas as pd  # noqa: F401  (mapInPandas batches are pandas)
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -544,9 +546,9 @@ def _write_cells(cells: DataFrame, centroids: list[list[float]],
     and upsert."""
     cells.repartition("cell").write.mode("overwrite").partitionBy(
         "cell").parquet(path)
-    local_df_1p(
-        cells.sparkSession, [(json.dumps(centroids),)],
-        "centroids_json string"
+    cells.sparkSession.createDataFrame(
+        pd.DataFrame({"centroids_json": [json.dumps(centroids)]}),
+        "centroids_json string",
     ).write.mode("overwrite").parquet(path + "_quantizer")
 
 
@@ -700,12 +702,16 @@ def ann_recall_at_k(
         .limit(k)
         .select("vec_id")
     )
-    spark = embeddings.sparkSession
-    parts = []
-    for tier, ids in (("hamming", ham), ("int8", int8)):
-        hits = ids.join(exact, "vec_id").count()
-        parts.append((tier, hits / float(k)))
-    return local_df_1p(spark, parts, "tier string, recall double")
+    parts = pd.DataFrame(
+        [
+            (tier, ids.join(exact, "vec_id").count() / float(k))
+            for tier, ids in (("hamming", ham), ("int8", int8))
+        ],
+        columns=["tier", "recall"],
+    )
+    return embeddings.sparkSession.createDataFrame(
+        parts, "tier string, recall double"
+    )
 
 
 # ------------------------------------------------ incremental index upsert
@@ -832,51 +838,22 @@ def rrf_fuse(
     here it is a pure DataFrame op over the engine's own bm25_topk /
     brute_force_topk / ivf_topk outputs.
 
-    Each input is a 2-column (id, score) TOP-K result — already bounded
-    (<= its k rows), so the unpartitioned rank window and the outer joins
-    below run over driver-scale metadata no matter the corpus size (the
-    corpus-sized work happened inside the retrieval queries). For fusing
-    per-query result sets in bulk use `rrf_fuse_bulk`, which partitions
-    the same plan by query_id.
-
-    Determinism: ranks are row_number by (score desc, id asc) — total
-    order, engine-portable; contributions are added in input-list order,
-    left-to-right, so the float sum is order-deterministic and
-    hash-stable. Output: (doc_id, rrf, <name>_rank ... nullable ints),
-    top-`topn` by (rrf desc, doc_id).
+    Each input is a 2-column (id, score) TOP-K result, tagged with one
+    constant query id and fused by `rrf_fuse_bulk` (the same plan, with
+    every window partitioned by that id); the tag is dropped and the
+    top-`topn` rows ordered by (rrf desc, doc_id asc). Ranks are
+    row_number by (score desc, id asc); contributions are added in
+    input-list order, so the float sum is order-deterministic and
+    hash-stable. Output: (doc_id, rrf, <name>_rank ... nullable ints).
     """
-    from pyspark.sql import Window
-
-    fused = None
-    for r, name in zip(rankings, names):
-        id_col, score_col = r.columns[:2]
-        w = Window.orderBy(F.desc(score_col), F.asc(id_col))
-        ranked = r.select(
-            F.col(id_col).alias("doc_id"),
-            F.row_number().over(w).alias(f"{name}_rank"),
-        )
-        fused = (
-            ranked
-            if fused is None
-            else fused.join(ranked, "doc_id", "full_outer")
-        )
-    contribs = [
-        F.coalesce(
-            F.lit(1.0) / (F.lit(float(k)) + F.col(f"{n}_rank")), F.lit(0.0)
-        )
-        for n in names
-    ]
-    total = contribs[0]
-    for c in contribs[1:]:
-        total = total + c
+    q = "query_id"
     return (
-        fused.select(
-            "doc_id",
-            F.round(total, 6).alias("rrf"),
-            *[F.col(f"{n}_rank") for n in names],
+        rrf_fuse_bulk(
+            [r.select(F.lit(0).alias(q), *r.columns[:2]) for r in rankings],
+            names, k, topn, q,
         )
+        .drop(q)
         .orderBy(F.desc("rrf"), F.asc("doc_id"))
-        .limit(topn)
     )
 
 

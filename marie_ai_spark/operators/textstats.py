@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..functions import spread_input, stable_fingerprint, token_count, tokens
@@ -175,12 +175,12 @@ def _tri_counts(norm: DataFrame) -> DataFrame:
 
 
 def lang_profile_table(documents: DataFrame, top_k: int = 50) -> DataFrame:
-    """TRAIN once: the persistable language-trigram profile (p_lang, g,
-    rank). The 100-TB shape is write-this-table-then-classify; the fused
-    lang_id_ngram exists for oracle parity and small corpora. Counting
-    runs through the partially-aggregated Arrow stage (_tri_counts) —
-    same exact-integer counts as the explode form, a fraction of the
-    Arrow transfer."""
+    """TRAIN once: the persistable per-language trigram profile (lang, g,
+    rank) — the top_k char trigrams per language by (count desc, trigram
+    asc). Both trigram models train here: lang-ID at top_k 50, fluency
+    at top_k 200. Counting runs through the partially-aggregated Arrow
+    stage (_tri_counts) — same exact-integer counts as the explode form,
+    a fraction of the Arrow transfer."""
     counts = (
         _tri_counts(_norm_docs(documents))
         .groupBy("lang", "g")
@@ -194,7 +194,7 @@ def lang_profile_table(documents: DataFrame, top_k: int = 50) -> DataFrame:
             ),
         )
         .filter(F.col("rank") <= top_k)
-        .select(F.col("lang").alias("p_lang"), "g", "rank")
+        .select("lang", "g", "rank")
     )
 
 
@@ -208,9 +208,10 @@ def lang_id_ngram(documents: DataFrame, top_k: int = 50) -> DataFrame:
     the synthetic corpus (shared vocabulary across langs) it demonstrates
     the mechanics and scores near chance by construction.
 
-    Execution (round 8): the trained profile is collected — top_k rows per
-    language, the same bounded model-state collect the BM25/IVF trainers
-    make — and the apply side runs the dictionary-pattern stateless UDF
+    Execution: the profile trained by lang_profile_table (the trainer
+    fluency_scores shares) is collected — top_k rows per language,
+    bounded model state like the BM25 statistics and IVF centroids —
+    and the apply side runs the dictionary-pattern stateless UDF
     (lang_id_classify_stream): no second trigram pass, explode, profile
     join, score aggregation or argmax window in the plan. The DuckDB
     oracle (q_lang_id) checks the result end to end.
@@ -245,31 +246,9 @@ def fluency_scores(documents: DataFrame, top_k: int = 200) -> DataFrame:
     Output: (doc_id, lang, n_trigrams bigint, in_profile_frac).
     """
     rows = [
-        r.asDict() for r in fluency_profile_table(documents, top_k).collect()
+        r.asDict() for r in lang_profile_table(documents, top_k).collect()
     ]
     return fluency_classify_stream(spread_input(documents, "doc_id"), rows)
-
-
-def fluency_profile_table(documents: DataFrame, top_k: int = 200) -> DataFrame:
-    """TRAIN once: the persistable (lang, pg) fluency profile — the top_k
-    char trigrams per language (count desc, trigram asc). Counting runs
-    through the partially-aggregated Arrow stage (_tri_counts); identical
-    exact-integer counts, a fraction of the Arrow transfer."""
-    counts = (
-        _tri_counts(_norm_docs(documents))
-        .groupBy("lang", "g")
-        .agg(F.sum("c").alias("cnt"))
-    )
-    return (
-        counts.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("g"))
-            ),
-        )
-        .filter(F.col("rank") <= top_k)
-        .select("lang", F.col("g").alias("pg"))
-    )
 
 
 def lang_id_classify_stream(
@@ -277,11 +256,11 @@ def lang_id_classify_stream(
 ) -> DataFrame:
     """APPLY for the pretrained language-ID model, batch or streaming. An
     argmax window cannot run on an unbounded stream, so the profile —
-    tiny persisted model state, (p_lang, g, rank) rows — is pinned per
+    tiny persisted model state, (lang, g, rank) rows — is pinned per
     executor inside a STATELESS scalar pandas UDF (the dictionary
     pattern) and each document scores locally: score = sum over the
     doc's DISTINCT trigrams of (top_k + 1 - rank), exact integers,
-    argmax with p_lang-asc tie-break. The normalization mirrors the JVM
+    argmax with lang-asc tie-break. The normalization mirrors the JVM
     expression (ASCII \\s collapse + lower), and docs with no profile
     hit are dropped. The plan has no aggregate, window or exchange
     (tests/test_plan_shapes.py pins it); batch and availableNow
@@ -291,7 +270,7 @@ def lang_id_classify_stream(
     by_gram: dict = {}
     for r in profile_rows:
         by_gram.setdefault(r["g"], []).append(
-            (r["p_lang"], top_k + 1 - r["rank"])
+            (r["lang"], top_k + 1 - r["rank"])
         )
 
     def fn(texts: pd.Series) -> pd.DataFrame:
@@ -343,7 +322,8 @@ def fluency_classify_stream(
     documents: DataFrame, profile_rows: list
 ) -> DataFrame:
     """APPLY for the pretrained fluency profile, batch or streaming: the
-    (lang, pg) set pins per executor in a stateless scalar UDF that
+    (lang, g) set of the trained profile (lang_profile_table at the
+    fluency top_k) pins per executor in a stateless scalar UDF that
     emits the EXACT INTEGER components (n_trigrams, covered); the
     fraction + HALF_UP rounding stay JVM-side. The plan has no
     aggregate, window or exchange (tests/test_plan_shapes.py pins it);
@@ -351,7 +331,7 @@ def fluency_classify_stream(
     (tests/test_streaming.py)."""
     import re as _re
 
-    pset = frozenset((r["lang"], r["pg"]) for r in profile_rows)
+    pset = frozenset((r["lang"], r["g"]) for r in profile_rows)
 
     def fn(texts: pd.Series, langs: pd.Series) -> pd.DataFrame:
         ns, covs = [], []
@@ -432,69 +412,24 @@ def bm25_topk(
     """BM25 lexical retrieval (Robertson/Sparck Jones): top-k documents
     for a bag of query terms — the keyword-side retrieval that pairs
     with the ANN embedding side for query-based corpus slicing ("find
-    training docs about X"). Fully relational:
-
-      - one narrow pass tokenizes and takes per-doc length;
-      - corpus stats (N, avgdl) are a 1-row aggregate (driver metadata,
-        like IVF centroids);
-      - term frequencies exist ONLY for query terms (`isin` prunes the
-        explode before the shuffle), so the aggregate is
-        |matching docs x terms|, not corpus-wide;
-      - document frequencies are a <= |terms|-row aggregate joined back
-        as a broadcast;
-      - the per-doc score folds term scores in TERM-ASCENDING order
-        (sort_array + aggregate) so the float sum is order-deterministic
-        and hashes identically on any engine.
+    training docs about X"). Train + apply: bm25_train_stats pins
+    (N, avgdl, per-term df) in one observed pass, bm25_score_stream scores
+    every document with per-row expressions, and the matched rows are
+    cut to the top k by (bm25 desc, doc_id asc) — Spark's TakeOrdered,
+    no shuffle keyed on doc_id.
 
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (the non-negative variant);
     score rounded to 4 decimals; ties broken by doc_id.
     """
-    toks = spread_input(documents, "doc_id").select(
-        "doc_id", tokens("text").alias("w")
-    ).withColumn("dl", F.size("w"))
-    stats = toks.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    ).first()
-    n_docs, avgdl = stats["n"], stats["avgdl"] or 1.0
-
-    tf = (
-        toks.select("doc_id", "dl", F.explode("w").alias("t"))
-        .filter(F.col("t").isin(list(query_terms)))
-        .groupBy("doc_id", "dl", "t")
-        .agg(F.count(F.lit(1)).alias("tf"))
+    docs = spread_input(documents, "doc_id")
+    stats = bm25_train_stats(docs, query_terms)
+    return (
+        bm25_score_stream(docs, stats, k1, b)
+        .filter("matched")
+        .select("doc_id", "bm25")
+        .orderBy(F.desc("bm25"), F.asc("doc_id"))
+        .limit(k)
     )
-    df_tbl = tf.groupBy("t").agg(
-        F.count_distinct("doc_id").alias("df")
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    term_score = idf * (
-        F.col("tf") * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(float(avgdl))))
-    )
-    per_term = tf.join(F.broadcast(df_tbl), "t").select(
-        "doc_id", "t", term_score.alias("s")
-    )
-    folded = (
-        per_term.groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("t", "s"))).alias("parts")
-        )
-        .select(
-            "doc_id",
-            F.round(
-                F.aggregate(
-                    F.col("parts"),
-                    F.lit(0.0),
-                    lambda acc, p: acc + p["s"],
-                ),
-                4,
-            ).alias("bm25"),
-        )
-    )
-    return folded.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
 
 
 def bm25_train_stats(
@@ -502,28 +437,32 @@ def bm25_train_stats(
 ) -> dict:
     """Pin the corpus-level BM25 statistics as persistable model state —
     the train half of the train-once/apply-on-ingest split (same shape
-    as lang_id_profile / fluency_profile): one 1-row aggregate for
-    (N, avgdl) and one <= |terms|-row aggregate for per-term document
-    frequencies. The returned dict is tiny driver metadata (JSON-able;
-    persist next to the corpus like the IVF quantizer)."""
-    toks = spread_input(documents, "doc_id").select(
-        "doc_id", tokens("text").alias("w")
-    ).withColumn("dl", F.size("w"))
-    stats = toks.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    ).first()
-    df_map = {
-        r["t"]: int(r["df"])
-        for r in toks.select("doc_id", F.explode("w").alias("t"))
-        .filter(F.col("t").isin(list(query_terms)))
-        .groupBy("t")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .collect()
-    }
+    as lang_profile_table): the row count, the mean token count, and per
+    distinct query term the number of documents whose tokens contain it.
+    `doc_id` is the key of the documents table, so counting containing
+    rows gives each term's document frequency. The aggregates ride an
+    Observation on one pass into the no-op sink: one job, no exchange
+    (a global agg() plans a single-partition exchange, which adaptive
+    execution runs as a second job). The returned dict is tiny driver
+    metadata (JSON-able; persist next to the corpus like the IVF
+    quantizer)."""
+    terms = sorted(set(query_terms))
+    seen = Observation()
+    documents.select(tokens("text").alias("w")).observe(
+        seen,
+        F.count(F.lit(1)).alias("n"),
+        F.avg(F.size("w")).alias("avgdl"),
+        *[
+            F.sum(F.array_contains("w", t).cast("long")).alias(f"df{i}")
+            for i, t in enumerate(terms)
+        ],
+    ).write.format("noop").mode("overwrite").save()
+    stats = seen.get
+    df_map = {t: int(stats[f"df{i}"] or 0) for i, t in enumerate(terms)}
     return {
         "n_docs": int(stats["n"]),
         "avgdl": float(stats["avgdl"] or 1.0),
-        "df": {t: df_map.get(t, 0) for t in query_terms},
+        "df": {t: df_map[t] for t in query_terms},
     }
 
 
@@ -537,17 +476,17 @@ def bm25_score_stream(
     the pinned train-time statistics with PURE per-row column
     expressions — no corpus aggregate in the plan, so the same code runs
     on a batch DataFrame and an unbounded readStream (availableNow
-    parity is test-asserted, bit-equal to bm25_topk's scores).
+    parity is test-asserted). bm25_topk is this apply over the whole
+    corpus, cut to its top k.
 
-    Bit-equality with the batch fold: per-term scores are added in
-    TERM-ASCENDING order (the batch sort_array fold order), absent terms
-    contribute an exact +0.0 (float identity), idf stays a JVM ln over
-    the pinned df literal (constant-folded by Catalyst — same double the
-    batch path computes per row), and the rounding is the same JVM
-    round-half-up. Terms with train-time df == 0 never contribute (the
-    batch join drops them); a term newly appearing after training keeps
-    scoring 0 until stats are re-trained — the documented staleness of
-    any pinned-model apply path.
+    Order-determinism: per-term scores are added in TERM-ASCENDING
+    order, absent terms contribute an exact +0.0 (float identity), idf
+    is a JVM ln over the pinned df literal (constant-folded by
+    Catalyst), and the rounding is JVM round-half-up — so the DuckDB
+    oracle (q_bm25) reproduces every score bit for bit. Terms with
+    train-time df == 0 never contribute; a term newly appearing after
+    training keeps scoring 0 until stats are re-trained — the documented
+    staleness of any pinned-model apply path.
 
     Output: (doc_id, bm25, matched) for every input row; filter
     `matched` for the batch-identical result set."""

@@ -23,13 +23,13 @@ bucket) so it is stable under any task/partition order at any scale.
 
 from __future__ import annotations
 
-import os
 import uuid
+
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_df_1p
 from ..sources import commit
 
 LINEAGE_SCHEMA = (
@@ -46,10 +46,10 @@ def bucket_col(n_buckets: int):
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
     """The lineage table at `path`, or an empty one before the first
-    append."""
-    if os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
+    append. The table is listed through its Hadoop filesystem, so a URI
+    (`file://`, `hdfs://`, ...) resolves like a plain path."""
+    fs = commit._Fs(spark, path)
+    if any(f.endswith(".parquet") for f in fs.names(fs.root)):
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     return spark.createDataFrame([], LINEAGE_SCHEMA)
 
@@ -88,8 +88,11 @@ def append_lineage(spark: SparkSession, path: str, rows: list[dict]) -> None:
     if not rows:
         return
     cols = [c.split()[0] for c in LINEAGE_SCHEMA.split(", ")]
-    df = local_df_1p(spark, [tuple(r[c] for c in cols) for r in rows],
-                     LINEAGE_SCHEMA)
+    # from pandas over Arrow: a LocalTableScan, no Python-worker job;
+    # naive timestamps are UTC, the session time zone
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=cols), LINEAGE_SCHEMA
+    ).coalesce(1)
     tag = uuid.uuid4().hex
     stage = f"{path}__stage_{tag}"
     df.write.mode("overwrite").parquet(stage)

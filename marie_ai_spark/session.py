@@ -55,19 +55,3 @@ def get_spark(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def local_df_1p(spark: SparkSession, data: list, schema):
-    """Single-partition local DataFrame for tiny metadata writes
-    (lineage appends, quantizer/marker rows).
-
-    `createDataFrame(list)` spreads even ONE row over defaultParallelism
-    Python partitions, and `coalesce(1)` then evaluates all of them
-    SEQUENTIALLY inside a single task — one Python-worker round-trip per
-    empty parent partition, measured 6-7s per single-row parquet write
-    at local[32] (vs 0.35s with one partition up front). Parallelizing
-    to one partition makes the metadata write a single Python eval; at
-    cluster scale it also avoids scheduling width-of-cluster no-op
-    tasks for a kilobyte of metadata."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, 1), schema
-    )

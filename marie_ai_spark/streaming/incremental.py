@@ -27,7 +27,6 @@ def stream_extract(
     input_path: str,
     output_path: str,
     checkpoint: str,
-    await_termination: bool = True,
 ):
     """Drain all currently-available new transcript files through the
     extraction map into a parquet sink, exactly-once via the checkpoint.
@@ -45,8 +44,7 @@ def stream_extract(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 

@@ -162,8 +162,8 @@ def test_lang_id_classify_has_no_profile_aggregation(spark):
     from marie_ai_spark.operators.textstats import lang_id_classify_stream
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    profile = [{"p_lang": "en", "g": "the", "rank": 1},
-               {"p_lang": "de", "g": "der", "rank": 1}]
+    profile = [{"lang": "en", "g": "the", "rank": 1},
+               {"lang": "de", "g": "der", "rank": 1}]
     plan = _plan(lang_id_classify_stream(docs, profile, top_k=50))
     _no_aggregate_window_exchange(plan)
     # one scoring pass: the no-hit filter must not plan a second UDF copy
@@ -177,7 +177,8 @@ def test_fluency_classify_has_no_profile_aggregation(spark):
     from marie_ai_spark.operators.textstats import fluency_classify_stream
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    profile = [{"lang": "en", "pg": "the"}, {"lang": "de", "pg": "der"}]
+    profile = [{"lang": "en", "g": "the", "rank": 1},
+               {"lang": "de", "g": "der", "rank": 1}]
     plan = _plan(fluency_classify_stream(docs, profile))
     _no_aggregate_window_exchange(plan)
     assert _count(plan, "ArrowEvalPython") == 1, plan[:800]
@@ -256,9 +257,41 @@ def test_split_forms_equal_fused(spark):
     s2 = {tuple(r) for r in textstats.fluency_classify_stream(
         docs,
         [r.asDict()
-         for r in textstats.fluency_profile_table(docs, 50).collect()],
+         for r in textstats.lang_profile_table(docs, 50).collect()],
     ).collect()}
     assert f2 == s2 == want_flu and f2
+
+
+def test_bm25_topk_has_no_doc_id_shuffle(spark):
+    """bm25_topk is train + apply + TakeOrdered: the per-(doc, term)
+    aggregate, the df join and the per-doc fold are gone, so no exchange
+    is keyed on doc_id. The input already has default parallelism, so
+    spread_input adds nothing and the plan is the operator's own."""
+    from marie_ai_spark.operators.textstats import bm25_topk
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    plan = _plan(bm25_topk(docs, ["spark", "merge", "window"], k=5))
+    assert "hashpartitioning(doc_id" not in plan, plan[:1200]
+
+
+def test_bm25_train_stats_is_one_job(spark):
+    """The corpus statistics (N, avgdl, per-term df) come from ONE global
+    aggregate over the documents: one Spark job, counted by job group."""
+    from marie_ai_spark.operators.textstats import bm25_train_stats
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    sc = spark.sparkContext
+    group = "bm25-train-stats"
+    sc.setJobGroup(group, "train BM25 corpus statistics")
+    try:
+        stats = bm25_train_stats(docs, ["spark", "merge", "window"])
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1, jobs
+    assert stats["n_docs"] == docs.count()
 
 
 def test_faithfulness_is_join_only(spark, tr):

@@ -484,6 +484,20 @@ def test_run_extract_leaves_session_conf_unchanged(spark, tmp_path):
     assert max(sizes) <= 7 and len(sizes) > 2
 
 
+def test_resume_on_uri_out_dir(spark, tmp_path):
+    """The lineage table is found through its Hadoop filesystem: with a
+    `file://` URI as out_dir, a rerun of the same run_id finds every
+    bucket done and processes none (an os-path check of the URI saw no
+    table, so every rerun reprocessed every bucket)."""
+    inp = str(tmp_path / "in")
+    out = "file://" + str(tmp_path / "out")
+    spark.createDataFrame(gen_pandas(30, seed=51)).write.parquet(inp)
+    r1 = run_extract(spark, inp, out, run_id="uri", n_buckets=4)
+    assert r1["processed"] == 4
+    r2 = run_extract(spark, inp, out, run_id="uri", n_buckets=4)
+    assert (r2["processed"], r2["skipped"]) == (0, 4)
+
+
 def test_concurrent_disjoint_bucket_writers_converge(spark, tmp_path):
     """The safe subset of multi-writer use on the parquet seam (SURVEY
     §8.6): two run_extract jobs over DISJOINT bucket sets running at the

@@ -363,7 +363,6 @@ def test_streaming_pretrained_classify_matches_batch(spark, tmp_path):
     import __spark_entry__ as entrymod
     from marie_ai_spark.operators.textstats import (
         fluency_classify_stream,
-        fluency_profile_table,
         lang_id_classify_stream,
         lang_profile_table,
     )
@@ -372,7 +371,7 @@ def test_streaming_pretrained_classify_matches_batch(spark, tmp_path):
     docs = spark.read.parquet(docs_path)
     lang_rows = [r.asDict() for r in lang_profile_table(docs, top_k=50).collect()]
     flu_rows = [r.asDict()
-                for r in fluency_profile_table(docs, top_k=200).collect()]
+                for r in lang_profile_table(docs, top_k=200).collect()]
 
     # batch parity: dictionary UDF == DuckDB oracle (q_lang_id trains at
     # top_k=50, q_fluency at top_k=200)
