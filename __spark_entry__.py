@@ -345,9 +345,10 @@ def q_line_dedup(spark, sf):
 
 def q_contamination_flag(spark, sf):
     """Streaming-form decontamination: benchmark 13-gram set collected as
-    static metadata, contamination as a pure arrays_overlap column — the
-    shape that runs unchanged under Structured Streaming (parity-tested
-    against the aggregation-join form in tests/test_streaming.py)."""
+    static metadata, contamination as a stateless set-probe UDF column —
+    the shape that runs unchanged under Structured Streaming
+    (parity-tested against the aggregation-join form in
+    tests/test_streaming.py)."""
     docs = _t(spark, sf, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"

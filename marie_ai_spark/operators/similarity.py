@@ -841,7 +841,8 @@ def rrf_fuse(
     Each input is a 2-column (id, score) TOP-K result, tagged with one
     constant query id and fused by `rrf_fuse_bulk` (the same plan, with
     every window partitioned by that id); the tag is dropped and the
-    top-`topn` rows ordered by (rrf desc, doc_id asc). Ranks are
+    top-`topn` rows ordered by (rrf desc, doc_id asc) — a TakeOrdered
+    (the limit spares the range sort its sampling job). Ranks are
     row_number by (score desc, id asc); contributions are added in
     input-list order, so the float sum is order-deterministic and
     hash-stable. Output: (doc_id, rrf, <name>_rank ... nullable ints).
@@ -854,6 +855,7 @@ def rrf_fuse(
         )
         .drop(q)
         .orderBy(F.desc("rrf"), F.asc("doc_id"))
+        .limit(topn)
     )
 
 

@@ -415,8 +415,10 @@ def bm25_topk(
     training docs about X"). Train + apply: bm25_train_stats pins
     (N, avgdl, per-term df) in one observed pass, bm25_score_stream scores
     every document with per-row expressions, and the matched rows are
-    cut to the top k by (bm25 desc, doc_id asc) — Spark's TakeOrdered,
-    no shuffle keyed on doc_id.
+    cut to the top k by (bm25 desc, doc_id asc) — Spark's TakeOrdered.
+    No aggregate or join is keyed on doc_id; the only exchange is
+    spread_input's, over a scan narrower than the cluster, and both
+    halves read its output.
 
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (the non-negative variant);
     score rounded to 4 decimals; ties broken by doc_id.
